@@ -23,15 +23,16 @@ re-expressed in ~pure PySpark + stdlib:
   single-node analogue of Delta's conditional-put / rename-commit on
   object stores.
 - ``<root>/_log/<v020>.checkpoint.json``: every CHECKPOINT_EVERY commits
-  the live-segment state is checkpointed, so snapshot resolution replays
-  only the tail instead of the whole log.  Sidecar form (Delta V2
-  checkpoints + sidecars, simplified to JSON): the main file carries the
-  small folds (txns, DVs, constraints) plus references to immutable
-  ``<v020>.<uuid>.sidecar.json`` files of up to SIDECAR_MAX segments'
-  metadata each; per checkpoint only the sidecars the tail touched are
-  rewritten, so checkpoint-commit cost is O(tail + dirty), not O(live).
-  Round-11 inline checkpoints stay readable (upgraded at the next
-  checkpoint write).
+  the table state is checkpointed, so snapshot resolution replays only
+  the tail instead of the whole log.  One format (Delta V2 checkpoints +
+  sidecars, simplified to JSON): the main file carries the small folds
+  (txns, active DVs, constraints) plus references to immutable
+  ``<v020>.<uuid>.sidecar.json`` files, each holding up to SIDECAR_MAX
+  live segments' ``{stats, pv, commit}``.  A checkpoint reuses every
+  sidecar of its predecessor whose segments are all still live, so its
+  cost is O(tail + changed sidecars), not O(live).  Each file is fsynced
+  before its rename; a reader treats a missing or unparsable checkpoint
+  or sidecar as absent and falls back to an older checkpoint or the log.
 
 Concurrency contract (optimistic, Delta-style): writers read a snapshot,
 write new segments, then attempt the ``snapshot_version + 1`` commit.  A
@@ -66,6 +67,8 @@ instead of POSIX ``link``.
 from __future__ import annotations
 
 import base64
+import bisect
+import dataclasses
 import hashlib
 import json
 import os
@@ -212,6 +215,25 @@ def read_commit(root: str, version: int) -> dict:
         os.path.join(root, LOG_DIR, _fmt_version(version) + ".json")
     ) as fh:
         return json.load(fh)
+
+
+def _publish_json(path: str, payload: dict) -> None:
+    """Write ``payload`` to ``path`` through a scratch file that is
+    fsynced before its rename: after a crash ``path`` is absent or
+    complete, never a name over unflushed (zero-length) data."""
+    scratch = f"{path}.tmp-{os.getpid()}-{uuid.uuid4().hex[:8]}"
+    try:
+        with open(scratch, "w") as fh:
+            json.dump(payload, fh)
+            fh.flush()
+            os.fsync(fh.fileno())
+        os.rename(scratch, path)
+    except OSError:
+        try:
+            os.unlink(scratch)
+        except OSError:
+            pass
+        raise
 
 
 #: lossless widenings the parquet scan layer performs at read time
@@ -496,6 +518,34 @@ def _check_constraint_defs(
         ).collect()
 
 
+@dataclasses.dataclass
+class LogState:
+    """The table state at one version, as :meth:`VersionedTable._fold`
+    resolves it from the log.  Callers must not mutate the per-segment
+    metadata dicts: they are shared with the checkpoint cache."""
+
+    version: int
+    #: live segment -> {"stats": footer min/max (+ __bytes__, __hll__,
+    #: __mcv__), "pv": partition tuple or None, "commit": the version
+    #: that wrote it}
+    segments: dict[str, dict]
+    #: active deletion-vector files
+    dvs: set[str]
+    #: latest [batch id, version] per idempotent-append source
+    txns: dict[str, list]
+    #: active CHECK constraints
+    constraints: dict[str, str]
+    #: (name, segments) per sidecar of the checkpoint the fold started
+    #: from — what the next checkpoint may reuse, not table state
+    sidecars: list[tuple[str, list[str]]] = dataclasses.field(
+        default_factory=list, compare=False, repr=False
+    )
+
+    @property
+    def live(self) -> set[str]:
+        return set(self.segments)
+
+
 class VersionedTable:
     """Handle on a vtable root.  All mutating ops append ONE commit."""
 
@@ -695,33 +745,17 @@ class VersionedTable:
         data — :meth:`restore` does NOT revert them (a loosened check
         must not silently re-tighten because someone restored data) —
         though a restore DOES re-validate against checks added since its
-        target (see :meth:`restore`).  O(tail) via the checkpointed map,
-        like the txn fold; pre-rev checkpoints (no ``constraints`` key)
-        fall back to the genesis walk — slower, never wrong."""
+        target (see :meth:`restore`).  O(tail) via the checkpointed
+        fold."""
         if version is None:
             # only the head-defaulting path needs the O(history) log
-            # listing — an explicit version (every checkpoint write)
-            # must not pay a listdir over the whole log per call
+            # listing — an explicit version must not pay a listdir over
+            # the whole log per call
             versions = self._versions()
             if not versions:
                 return {}
             version = versions[-1]
-        floor, fallback = -1, None
-        ckpt = self._latest_checkpoint(version)
-        if ckpt is not None and "constraints" in ckpt:
-            floor = ckpt["version"]
-            fallback = dict(ckpt["constraints"])
-        # contiguous log: the candidate tail is a range (the full list
-        # comp was O(history) python work per fold at deep logs)
-        for v in range(version, floor, -1):
-            entry = self._read_commit(v)
-            if "constraints" in entry:
-                return dict(entry["constraints"])
-            if v == 0:
-                return dict(
-                    entry.get("properties", {}).get("constraints", {})
-                )
-        return fallback if fallback is not None else {}
+        return self._fold(version).constraints
 
     def _enforce_constraints(
         self, rels: list[str], cons: dict[str, str], op: str
@@ -815,7 +849,7 @@ class VersionedTable:
     def drop_constraint(self, name: str) -> int:
         """ALTER TABLE DROP CONSTRAINT: metadata-only commit removing the
         named check from the active map."""
-        v, _, entry = self._snapshot(None)
+        v, _, _, entry = self._snapshot_state(None)
         cons = self.constraints(v)
         if name not in cons:
             raise ValueError(
@@ -1053,211 +1087,74 @@ class VersionedTable:
 
     def _write_checkpoint(self, version: int) -> None:
         """Sidecar checkpoint (Delta V2 checkpoints + sidecars, Iceberg's
-        manifest list + manifests): the main ``<v>.checkpoint.json``
-        carries only the SMALL folds — txn map (Delta setTransactions),
-        active DV set, CHECK constraints — plus references to immutable
-        sidecar files, each holding up to ``SIDECAR_MAX`` live segments'
-        metadata ({stats, pv, writing commit} per segment, the Delta
-        add-file stats / Iceberg manifest entries).  Per checkpoint only
-        the DIRTY sidecars are rewritten — the ones the tail's
-        adds/removes touched — so a drip-feed append workload rewrites
-        one ~SIDECAR_MAX-entry file per checkpoint regardless of history
-        depth.  Round-11's inline form serialized the FULL live-set maps
-        every CHECKPOINT_EVERY commits: 6.5 ms -> 217 ms across a
-        10k-commit log (SCALE_STRESSORS_r11 deep_history) because the
-        payload is O(live) and live grows with the log.  Reads hydrate
-        main + sidecars back into the legacy in-memory shape once per
-        cached payload (:meth:`_hydrate_checkpoint`), so every consumer
-        fold is unchanged; legacy inline checkpoints stay readable and
-        are upgraded to sidecar form at the next checkpoint write."""
-        sidecars = None
-        prev = self._latest_checkpoint(version)
-        if prev is not None and "_sidecars" in prev:
-            sidecars = self._fold_sidecars_incremental(prev, version)
-        if sidecars is None:
-            # genesis, legacy-inline predecessor, or a restore in the
-            # tail (re-references pre-checkpoint segments whose stats /
-            # physical-writer commit the tail entries don't carry):
-            # one full fold through the existing checkpointed meta
-            # walks, then chunk.  O(live) once; incremental after.
-            live = self._resolve_live(version)
-            stats, pvs = self._live_segment_meta(version)
-            commits = self._live_segment_commits(version)
-            segs = {
-                rel: {
-                    "stats": stats.get(rel, {}),
-                    "pv": pvs.get(rel),
-                    "commit": commits.get(rel),
-                }
-                for rel in sorted(live)
-            }
-            sidecars = [
-                {"name": None, "segments": dict(chunk)}
-                for chunk in _chunks(sorted(segs.items()), SIDECAR_MAX)
-            ]
-        # publish dirty sidecars first (immutable, fresh uuid names — a
-        # crash before the main rename strands unreferenced litter,
-        # never a readable-but-wrong checkpoint)
+        manifest list + manifests) of :meth:`_fold` at ``version``: the
+        main ``<v>.checkpoint.json`` carries only the SMALL folds — txn
+        map (Delta setTransactions), active DV set, CHECK constraints —
+        plus references to immutable sidecar files, each holding up to
+        ``SIDECAR_MAX`` live segments' ``{stats, pv, commit}`` (the Delta
+        add-file stats / Iceberg manifest entries).  A sidecar of the
+        checkpoint the fold started from is reused while every segment
+        in it is still live; the other live segments are written to
+        fresh sidecars, so a drip-feed append workload writes about one
+        ~SIDECAR_MAX-entry file per checkpoint regardless of history
+        depth — O(tail + changed sidecars), not O(live)."""
+        state = self._fold(version)
+        layout = [
+            (name, rels)
+            for name, rels in state.sidecars
+            if all(rel in state.segments for rel in rels)
+        ]
+        fresh = set(state.segments).difference(*(r for _, r in layout))
+        if fresh:
+            # a partly filled sidecar is rewritten with the new segments,
+            # so appends top it up instead of adding a file per checkpoint
+            layout = [sc for sc in layout if len(sc[1]) == SIDECAR_MAX]
+            fresh = set(state.segments).difference(*(r for _, r in layout))
+        # sidecars before the main file (immutable, fresh uuid names — a
+        # crash before the main rename strands unreferenced litter, never
+        # a readable-but-wrong checkpoint)
         try:
-            for sc in sidecars:
-                if sc["name"] is not None:
-                    continue  # clean: reused from the previous checkpoint
+            for chunk in _chunks(sorted(fresh), SIDECAR_MAX):
                 name = (
                     f"{_fmt_version(version)}."
                     f"{uuid.uuid4().hex[:8]}.sidecar.json"
                 )
-                spath = os.path.join(self._log_dir, name)
-                sscratch = (
-                    f"{spath}.tmp-{os.getpid()}-{uuid.uuid4().hex[:8]}"
+                _publish_json(
+                    os.path.join(self._log_dir, name),
+                    {"segments": {rel: state.segments[rel] for rel in chunk}},
                 )
-                with open(sscratch, "w") as fh:
-                    json.dump({"segments": sc["segments"]}, fh)
-                os.rename(sscratch, spath)
-                sc["name"] = name
+                layout.append((name, chunk))
+            _publish_json(self._checkpoint_path(version), {
+                "version": version,
+                # latest (batch, version) per streaming source, so
+                # idempotent_append's replay check stays O(tail)
+                "txns": state.txns,
+                "dvs": sorted(state.dvs),
+                "constraints": state.constraints,
+                "sidecars": [
+                    {"name": name, "n": len(rels)} for name, rels in layout
+                ],
+            })
         except OSError:
-            return  # best-effort: skip this checkpoint entirely
-        ckpt = {
-            "version": version,
-            # latest (batch, version) per streaming source, so
-            # idempotent_append's replay check stays O(tail)
-            "txns": self._resolve_txns(version),
-            "dvs": sorted(self._resolve_dvs(version)),
-            # the active CHECK-constraint map, so constraints() is
-            # O(tail) like every other fold (pre-rev checkpoints
-            # lack the key and force the genesis walk — never wrong)
-            "constraints": self.constraints(version),
-            "sidecars": [
-                {"name": sc["name"], "n": len(sc["segments"])}
-                for sc in sidecars
-            ],
-        }
-        cpath = self._checkpoint_path(version)
-        cscratch = f"{cpath}.tmp-{os.getpid()}-{uuid.uuid4().hex[:8]}"
-        try:
-            with open(cscratch, "w") as fh:
-                json.dump(ckpt, fh)
-        except OSError:
-            return
-        try:
-            os.rename(cscratch, cpath)
-        except OSError:
+            return  # best-effort: a lost checkpoint means a longer tail
+        # the next fold on this handle starts here without a listdir
+        self._remember_checkpoint(dataclasses.replace(state, sidecars=layout))
+
+    def _remember_checkpoint(self, state: LogState) -> None:
+        """Register a checkpoint's state in this handle's discovery cache
+        (soft cap of four states)."""
+        if state.version not in self._ckpt_versions:
+            bisect.insort(self._ckpt_versions, state.version)
+        if len(self._ckpt_states) >= 4:
+            # racing in-process writer threads share this handle cache:
+            # next(iter()) can raise RuntimeError if a peer inserts
+            # mid-eviction — skip on contention, same soft-cap policy as
+            # the DV-position memo
             try:
-                os.unlink(cscratch)
-            except OSError:
+                self._ckpt_states.pop(next(iter(self._ckpt_states)), None)
+            except RuntimeError:
                 pass
-        else:
-            # register in this handle's discovery cache so the next
-            # fold uses it without a fresh listdir; hydration of the
-            # legacy-shape views is lazy (first consumer fold)
-            ckpt["_sidecars"] = sidecars
-            if hasattr(self, "_ckpt_versions") and (
-                version not in self._ckpt_versions
-            ):
-                import bisect
-
-                bisect.insort(self._ckpt_versions, version)
-                if len(self._ckpt_payloads) >= 4:
-                    # racing in-process writer threads share this handle
-                    # cache: next(iter()) can raise RuntimeError if a
-                    # peer inserts mid-eviction — skip on contention,
-                    # same soft-cap policy as the DV-position memo
-                    try:
-                        self._ckpt_payloads.pop(
-                            next(iter(self._ckpt_payloads)), None
-                        )
-                    except RuntimeError:
-                        pass
-                self._ckpt_payloads[version] = ckpt
-
-    def _fold_sidecars_incremental(
-        self, prev: dict, version: int
-    ) -> list[dict] | None:
-        """New sidecar list for a checkpoint at ``version``, folded from
-        the previous checkpoint's sidecars + the commit tail.  Clean
-        sidecars are returned with their existing ``name`` (reused,
-        never rewritten); touched ones carry ``name: None`` (the writer
-        publishes them fresh — sidecar files are immutable).  Returns
-        None when the tail contains a restore: its ``add`` re-references
-        segments whose stats/pv/physical-writer live in commits BEFORE
-        the previous checkpoint, which only the full fold resolves."""
-        scs = [dict(sc) for sc in prev["_sidecars"]]
-        adds: dict[str, dict] = {}
-        removes: set[str] = set()
-        for v in range(prev["version"] + 1, version + 1):
-            entry = self._read_commit(v)
-            if "restored_from" in entry:
-                return None
-            for rel in entry["remove"]:
-                if rel in adds:
-                    del adds[rel]  # added and removed within the tail
-                else:
-                    removes.add(rel)
-            for rel in entry["add"]:
-                adds[rel] = {
-                    "stats": entry.get("stats", {}).get(rel, {}),
-                    "pv": (entry.get("pv") or {}).get(rel) or None,
-                    "commit": v,
-                }
-        if removes:
-            for i, sc in enumerate(scs):
-                hit = removes & sc["segments"].keys()
-                if hit:
-                    segs = dict(sc["segments"])
-                    for rel in hit:
-                        del segs[rel]
-                    scs[i] = {"name": None, "segments": segs}
-            scs = [sc for sc in scs if sc["segments"]]
-        if adds:
-            items = sorted(adds.items())
-            if scs and len(scs[-1]["segments"]) < SIDECAR_MAX:
-                room = SIDECAR_MAX - len(scs[-1]["segments"])
-                head, items = items[:room], items[room:]
-                segs = dict(scs[-1]["segments"])
-                segs.update(head)
-                scs[-1] = {"name": None, "segments": segs}
-            for chunk in _chunks(items, SIDECAR_MAX):
-                scs.append({"name": None, "segments": dict(chunk)})
-        return scs
-
-    def _hydrate_checkpoint(self, payload: dict) -> dict:
-        """Materialize a sidecar checkpoint's legacy-shaped views
-        (``live`` / ``stats`` / ``pvs`` / ``seg_commits``) in place, so
-        every consumer fold reads the same keys whether the file on disk
-        is round-11 inline or sidecar form.  Idempotent and lazy: the
-        sidecar files are read once per cached payload, the merged views
-        built on first consumer access.  Raises OSError when a
-        referenced sidecar is unreadable (externally cleaned) — the
-        caller drops this checkpoint and falls back to an older one."""
-        if "sidecars" not in payload or "live" in payload:
-            return payload
-        if "_sidecars" not in payload:
-            scs = []
-            for ref in payload["sidecars"]:
-                with open(
-                    os.path.join(self._log_dir, ref["name"])
-                ) as fh:
-                    scs.append({
-                        "name": ref["name"],
-                        "segments": json.load(fh)["segments"],
-                    })
-            payload["_sidecars"] = scs
-        stats: dict[str, dict] = {}
-        pvs: dict[str, dict] = {}
-        seg_commits: dict[str, int] = {}
-        for sc in payload["_sidecars"]:
-            for rel, meta in sc["segments"].items():
-                stats[rel] = meta.get("stats") or {}
-                pv = meta.get("pv")
-                if pv:
-                    pvs[rel] = pv
-                c = meta.get("commit")
-                if c is not None:
-                    seg_commits[rel] = c
-        payload["stats"] = stats
-        payload["pvs"] = pvs
-        payload["seg_commits"] = seg_commits
-        payload["live"] = sorted(stats)
-        return payload
+        self._ckpt_states[state.version] = state
 
     #: ops whose commit changes table METADATA — never rebasable across:
     #: the lost writer derived its batch under schema/spec/constraint/
@@ -1428,152 +1325,134 @@ class VersionedTable:
             f"{self.root}"
         )
 
-    def _latest_checkpoint(self, version: int) -> dict | None:
-        """The newest checkpoint payload at or before ``version`` (None
-        when the log has none yet) — the single discovery point every
-        checkpointed fold shares.
+    def _checkpoint_versions(self) -> list[int]:
+        return sorted(
+            int(n[: -len(".checkpoint.json")])
+            for n in os.listdir(self._log_dir)
+            if n.endswith(".checkpoint.json")
+            and n[: -len(".checkpoint.json")].isdigit()
+        )
 
-        Per-handle caching (round-11 deep-history item): the discovery
-        listdir runs once per handle (refreshed when THIS handle writes
-        a checkpoint), and payloads are memoized — checkpoint files are
-        immutable and never vacuumed, so a cached payload can't go
-        stale.  A checkpoint another PROCESS wrote after this handle's
-        listing is simply not used yet: the fold replays a longer tail
-        off an older checkpoint, which is always correct."""
-        if not hasattr(self, "_ckpt_versions"):
-            self._ckpt_versions: list[int] = sorted(
-                int(n[: -len(".checkpoint.json")])
-                for n in os.listdir(self._log_dir)
-                if n.endswith(".checkpoint.json")
-                and n[: -len(".checkpoint.json")].isdigit()
-            )
-            self._ckpt_payloads: dict[int, dict] = {}
-        import bisect
+    def _fold(self, version: int, use_checkpoint: bool = True) -> LogState:
+        """The table state at ``version``: the newest readable checkpoint
+        at or before it plus the commit tail — O(tail) log metadata —
+        or, with ``use_checkpoint=False``, the whole log from genesis
+        (the reference the tests compare the checkpointed fold with).
 
-        i = bisect.bisect_right(self._ckpt_versions, version)
-        known = self._ckpt_versions[i - 1] if i else -1
-        if version - known > 4 * CHECKPOINT_EVERY:
-            # the cached listing would force a long tail replay — other
-            # writers have likely checkpointed since; refresh once
-            self._ckpt_versions = sorted(
-                int(n[: -len(".checkpoint.json")])
-                for n in os.listdir(self._log_dir)
-                if n.endswith(".checkpoint.json")
-                and n[: -len(".checkpoint.json")].isdigit()
-            )
+        - Live set: each commit removes then adds segments.  Segment
+          metadata is immutable with the segment, so a live segment
+          carries the stats, partition tuple and version of the commit
+          that WROTE it; a restore re-references its target's segments
+          and takes their metadata from the fold at that target.
+        - DVs: a FULL-replace commit (overwrite / copy-on-write delete /
+          compact / whole-set merge) materializes every DV through the
+          read path it rewrote from, so the DV set resets to empty there.
+          Partial rewrites (merge_upsert_pruned) keep DVs active: rows of
+          removed segments simply stop matching (segment names are never
+          reused), so a stale DV entry can only be dead weight, never a
+          wrong delete.
+        - txns: single writer per source with increasing batch ids (the
+          structured-streaming model), so the latest entry subsumes all
+          earlier ones.
+        - Constraints: the newest ``set_constraint`` commit wins over the
+          create-time map.
+
+        Per-handle caching: the checkpoint listing runs once per handle
+        (refreshed when THIS handle writes a checkpoint or the listing is
+        far behind ``version``) and the parsed states are memoized —
+        checkpoint files are immutable and never vacuumed.  A checkpoint
+        another process wrote after this handle's listing is simply not
+        used yet: the fold replays a longer tail, which is always
+        correct.  A checkpoint whose main file or a sidecar is missing
+        or fails to parse (externally cleaned, or torn by a crash) is
+        dropped and the next older one is used."""
+        base = None
+        if use_checkpoint:
+            if not hasattr(self, "_ckpt_versions"):
+                self._ckpt_versions = self._checkpoint_versions()
+                self._ckpt_states: dict[int, LogState] = {}
             i = bisect.bisect_right(self._ckpt_versions, version)
-        if i == 0:
-            return None
-        cv = self._ckpt_versions[i - 1]
-        payload = self._ckpt_payloads.get(cv)
-        if payload is None:
-            try:
-                with open(self._checkpoint_path(cv)) as fh:
-                    payload = json.load(fh)
-                # sidecar form: load the referenced sidecar files now so
-                # an unreadable one (externally cleaned) fails here and
-                # falls back like a missing main file
-                payload = self._hydrate_checkpoint(payload)
-            except OSError:
-                # externally cleaned (not our vacuum's doing): drop it
-                # from the cache and fall back to the next older one
-                # (a racing thread may have dropped it first)
+            known = self._ckpt_versions[i - 1] if i else -1
+            if version - known > 4 * CHECKPOINT_EVERY:
+                # the cached listing would force a long tail replay —
+                # other writers have likely checkpointed since
+                self._ckpt_versions = self._checkpoint_versions()
+                i = bisect.bisect_right(self._ckpt_versions, version)
+            while i:
+                cv = self._ckpt_versions[i - 1]
+                base = self._ckpt_states.get(cv)
+                if base is not None:
+                    break
                 try:
-                    self._ckpt_versions.remove(cv)
-                except ValueError:
-                    pass
-                return self._latest_checkpoint(version)
-            if len(self._ckpt_payloads) >= 4:
-                # same contention guard as the write-path registration
-                try:
-                    self._ckpt_payloads.pop(
-                        next(iter(self._ckpt_payloads)), None
-                    )
-                except RuntimeError:
-                    pass
-            self._ckpt_payloads[cv] = payload
-        # a write-path registration caches {main + _sidecars} without the
-        # merged legacy views — build them on first consumer access
-        # (in-place, so the cached object keeps them; no file IO here)
-        return self._hydrate_checkpoint(payload)
-
-    def _resolve_state(
-        self, version: int, use_checkpoint: bool = True
-    ) -> tuple[set[str], set[str]]:
-        """(live segments, active deletion vectors) at ``version`` in ONE
-        checkpointed fold — O(tail) driver metadata, and every read needs
-        both.  DV semantics: a FULL-replace commit (overwrite /
-        copy-on-write delete / compact / whole-set merge) materializes
-        every DV through the read path it rewrote from, so the DV set
-        resets to empty there.  Partial rewrites (merge_upsert_pruned)
-        keep DVs active: rows of removed segments simply stop matching
-        (segment names are never reused), so a stale DV entry can only be
-        dead weight, never a wrong delete."""
-        start = 0
-        live: set[str] = set()
-        dvs: set[str] = set()
-        legacy_dv_refold = False
-        ckpt = self._latest_checkpoint(version) if use_checkpoint else None
-        if ckpt is not None:
-            live = set(ckpt["live"])
-            start = ckpt["version"] + 1
-            if "dvs" in ckpt:
-                dvs = set(ckpt["dvs"])
-            else:
-                # pre-DV-rev checkpoint: the dv fold must restart from
-                # genesis (the live fold may still use the checkpoint)
-                legacy_dv_refold = True
-        for v in range(start, version + 1):
+                    with open(self._checkpoint_path(cv)) as fh:
+                        main = json.load(fh)
+                    sidecars = []
+                    for ref in main["sidecars"]:
+                        with open(
+                            os.path.join(self._log_dir, ref["name"])
+                        ) as fh:
+                            sidecars.append(
+                                (ref["name"], json.load(fh)["segments"])
+                            )
+                except (OSError, ValueError):
+                    # missing or torn: fall back to the next older one
+                    # (a racing thread may have dropped it first)
+                    try:
+                        self._ckpt_versions.remove(cv)
+                    except ValueError:
+                        pass
+                    i = bisect.bisect_right(self._ckpt_versions, version)
+                    continue
+                base = LogState(
+                    cv,
+                    {r: m for _, segs in sidecars for r, m in segs.items()},
+                    set(main["dvs"]),
+                    main["txns"],
+                    main["constraints"],
+                    [(name, sorted(segs)) for name, segs in sidecars],
+                )
+                self._remember_checkpoint(base)
+                break
+        if base is None:
+            base = LogState(-1, {}, set(), {}, {})
+        segs = dict(base.segments)
+        dvs = set(base.dvs)
+        txns = {k: list(t) for k, t in base.txns.items()}
+        cons = dict(base.constraints)
+        for v in range(base.version + 1, version + 1):
             entry = self._read_commit(v)
             removed = set(entry["remove"])
-            if live and removed >= live:
+            if segs and removed.issuperset(segs):
                 dvs = set()  # full replace: the rewrite read applied DVs
-            live -= removed
-            live |= set(entry["add"])
+            for rel in removed:
+                segs.pop(rel, None)
+            if "restored_from" in entry:
+                then = self._fold(
+                    entry["restored_from"], use_checkpoint
+                ).segments
+                for rel in entry["add"]:
+                    segs[rel] = then[rel]
+            else:
+                stats = entry.get("stats", {})
+                pvs = entry.get("pv") or {}
+                for rel in entry["add"]:
+                    segs[rel] = {
+                        "stats": stats.get(rel, {}),
+                        "pv": pvs.get(rel) or None,
+                        "commit": v,
+                    }
             dvs -= set(entry.get("dv_remove", []))  # dv compaction
             dvs |= set(entry.get("dv_add", []))
-        if legacy_dv_refold:
-            dvs = self._resolve_state(version, use_checkpoint=False)[1]
-        return live, dvs
-
-    def _resolve_live(
-        self, version: int, use_checkpoint: bool = True
-    ) -> set[str]:
-        """Live segments at ``version`` (see :meth:`_resolve_state`)."""
-        return self._resolve_state(version, use_checkpoint)[0]
-
-    def _resolve_dvs(
-        self, version: int, use_checkpoint: bool = True
-    ) -> set[str]:
-        """Active DV files at ``version`` (see :meth:`_resolve_state`)."""
-        return self._resolve_state(version, use_checkpoint)[1]
-
-    def _resolve_txns(
-        self, version: int, use_checkpoint: bool = True
-    ) -> dict[str, list]:
-        """Latest ``{source: [batch, version]}`` transaction per streaming
-        source at ``version`` — from the nearest checkpoint carrying a
-        txn map (pre-txn checkpoints force a genesis fold, never a wrong
-        answer) plus the commit tail.  Single-writer-per-source with
-        monotonically increasing batch ids (the structured-streaming
-        model), so the latest entry subsumes all earlier ones."""
-        start = 0
-        txns: dict[str, list] = {}
-        if use_checkpoint:
-            ckpt = self._latest_checkpoint(version)
-            if ckpt is not None and "txns" in ckpt:
-                txns = {k: list(v) for k, v in ckpt["txns"].items()}
-                start = ckpt["version"] + 1
-            # else: an older-rev checkpoint — fold from genesis
-        for v in range(start, version + 1):
-            txn = self._read_commit(v).get("txn")
+            txn = entry.get("txn")
             if txn:
                 txns[txn["source"]] = [txn["batch"], v]
-        return txns
-
-    def _snapshot(self, version: int | None) -> tuple[int, list[str], dict]:
-        version, live, _, entry = self._snapshot_state(version)
-        return version, live, entry
+            if "constraints" in entry:
+                cons = dict(entry["constraints"])
+            elif v == 0:
+                cons = dict(
+                    entry.get("properties", {}).get("constraints", {})
+                )
+        return LogState(version, segs, dvs, txns, cons, base.sidecars)
 
     def _snapshot_state(
         self, version: int | None
@@ -1590,8 +1469,11 @@ class VersionedTable:
             raise ValueError(
                 f"unknown version {version} (have {versions[0]}..{versions[-1]})"
             )
-        live, dvs = self._resolve_state(version)
-        return version, sorted(live), sorted(dvs), self._read_commit(version)
+        state = self._fold(version)
+        return (
+            version, sorted(state.segments), sorted(state.dvs),
+            self._read_commit(version),
+        )
 
     def history(self) -> list[dict]:
         """All commits, oldest first (the DESCRIBE HISTORY surface)."""
@@ -1949,7 +1831,7 @@ class VersionedTable:
             read_schema = StructType(list(schema.fields) + retired)
         reader = self.spark.read.schema(read_schema)
         if dvs is None:
-            dvs = sorted(self._resolve_dvs(version))
+            dvs = sorted(self._fold(version).dvs)
         if dvs:
             self._check_present(version, dvs)
 
@@ -2350,7 +2232,7 @@ class VersionedTable:
         the bytes being served; vacuum/debug lineage).  One broadcast
         join of the identified scan against the O(files) segment→commit
         map — no data-side shuffle; the map resolves O(tail) via the
-        checkpointed fold (:meth:`_live_segment_commits`), so a
+        checkpointed fold (:meth:`_fold`), so a
         long-lived table's provenance read no longer pays a
         genesis-to-head log walk per call."""
         version, live, dvs, entry = self._snapshot_state(version)
@@ -2366,8 +2248,8 @@ class VersionedTable:
                 "read() it plainly or rename the column"
             )
         by_seg = {
-            os.path.basename(rel): v
-            for rel, v in self._live_segment_commits(version).items()
+            os.path.basename(rel): meta["commit"]
+            for rel, meta in self._fold(version).segments.items()
         }
         lookup = self.spark.createDataFrame(
             sorted(by_seg.items()), "_dv_seg string, _commit_version bigint"
@@ -2454,7 +2336,7 @@ class VersionedTable:
         Returns the exact original version for a replay of the source's
         latest batch (the foreachBatch failure model); an OLDER batch id
         also no-ops, returning the source's latest committed version."""
-        latest_txn = self._resolve_txns(self.latest_version()).get(source_id)
+        latest_txn = self._fold(self.latest_version()).txns.get(source_id)
         if latest_txn is not None and batch_id <= latest_txn[0]:
             # replay: this batch (or a predecessor it subsumes) committed
             return latest_txn[1]
@@ -2469,7 +2351,7 @@ class VersionedTable:
             # record the CURRENT (widened) schema, not the pre-race
             # df.schema, or it would silently revert the evolution for
             # every later reader (read() serves the latest commit schema).
-            latest_txn = self._resolve_txns(v).get(source_id)
+            latest_txn = self._fold(v).txns.get(source_id)
             if latest_txn is not None and batch_id <= latest_txn[0]:
                 return latest_txn[1]
             current = StructType.fromJson(self._read_commit(v)["schema"])
@@ -2515,7 +2397,7 @@ class VersionedTable:
         pre-evolution version still serves the schema recorded THEN.  At
         100 TB this is the whole point: adding a column is one metadata
         commit, never a table rewrite."""
-        v, _, entry = self._snapshot(None)
+        v, _, _, entry = self._snapshot_state(None)
         current = StructType.fromJson(entry["schema"])
         cur_types = {f.name: f.dataType for f in current.fields}
         batch_types = {f.name: f.dataType for f in df.schema.fields}
@@ -2611,7 +2493,7 @@ class VersionedTable:
         stats/bloom pushdown — sources/vtable_batch.py); the STREAMING
         source refuses renamed tables loudly (mid-stream schema change
         semantics are not defined for it)."""
-        v, _, entry = self._snapshot(None)
+        v, _, _, entry = self._snapshot_state(None)
         schema = StructType.fromJson(entry["schema"])
         names = [f.name for f in schema.fields]
         if old not in names:
@@ -2693,7 +2575,7 @@ class VersionedTable:
         drop resurrects the column with the data.  Refused when the
         column is absent, is the table's only column, or an active
         CHECK constraint references it."""
-        v, _, entry = self._snapshot(None)
+        v, _, _, entry = self._snapshot_state(None)
         schema = StructType.fromJson(entry["schema"])
         names = [f.name for f in schema.fields]
         if col not in names:
@@ -2757,7 +2639,7 @@ class VersionedTable:
         post-images, compaction) stay unpartitioned-and-always-scanned;
         re-partition them with :meth:`compact_clustered` + a fresh
         append if layout matters."""
-        v, _, entry = self._snapshot(None)
+        v, _, _, entry = self._snapshot_state(None)
         schema = StructType.fromJson(entry["schema"])
         types = {f.name: f.dataType.simpleString() for f in schema.fields}
         spec: list[dict] = []
@@ -2847,7 +2729,7 @@ class VersionedTable:
 
     def partition_spec(self, version: int | None = None) -> list[dict]:
         """The active partition spec at ``version`` (head if None)."""
-        _, _, entry = self._snapshot(version)
+        _, _, _, entry = self._snapshot_state(version)
         return entry.get("spec") or []
 
     def widen_column_type(self, col: str, new_type) -> int:
@@ -2874,7 +2756,7 @@ class VersionedTable:
         Reference parity: the reference has no ALTER surface (pandas
         scripts rewrite whole frames); this is the lakehouse-layer
         extension the round-9 verdict asked for (#2)."""
-        v, _, entry = self._snapshot(None)
+        v, _, _, entry = self._snapshot_state(None)
         schema = StructType.fromJson(entry["schema"])
         field = next((f for f in schema.fields if f.name == col), None)
         if field is None:
@@ -2946,7 +2828,7 @@ class VersionedTable:
         return v + 1
 
     def overwrite(self, df: DataFrame) -> int:
-        v, live, entry = self._snapshot(None)
+        v, live, _, entry = self._snapshot_state(None)
         spec = entry.get("spec") or []
         old_types = {
             f.name: f.dataType.simpleString()
@@ -3204,7 +3086,7 @@ class VersionedTable:
         from energy_emissions_lakehouse_spark.operators.merge import upsert
 
         source = self._require_schema(source, "merge_upsert")
-        v, live, _ = self._snapshot(None)
+        v, live, _, _ = self._snapshot_state(None)
         target = self.read(v)
         extra: dict = {"keys": keys}
         if self.cdf_enabled:
@@ -3253,7 +3135,10 @@ class VersionedTable:
         [min,max] ranges (O(files) rows — driver metadata scale); a
         segment lacking stats for the key is conservatively touched.
         Returns (touched, untouched), both sorted."""
-        stats = self._live_segment_stats(version)
+        stats = {
+            rel: meta["stats"]
+            for rel, meta in self._fold(version).segments.items()
+        }
         touched = {r for r, s in stats.items() if s.get(key) is None}
         ranged = [
             (r, stats[r][key][0], stats[r][key][1])
@@ -3294,7 +3179,7 @@ class VersionedTable:
         from energy_emissions_lakehouse_spark.operators.merge import upsert
 
         source = self._require_schema(source, "merge_upsert_pruned")
-        v, live, entry = self._snapshot(None)
+        v, live, _, entry = self._snapshot_state(None)
         touched, untouched = self.touched_segments(source, keys[0], v)
         schema = StructType.fromJson(entry["schema"])
         # DV-aware slice read: a merge-on-read-deleted row must not be
@@ -3323,29 +3208,33 @@ class VersionedTable:
             if self.cdf_enabled:
                 target.unpersist()
         # rebase probe: the merge READ every row whose keys[0] falls in
-        # the source's key range — one tiny agg over the delta side,
-        # LAZY so the uncontended path never runs it (resolved by
-        # _commit_rebased only on a lost race)
-        def _krange_probe():
-            krange = source.agg(
-                F.min(keys[0]).alias("mn"), F.max(keys[0]).alias("mx")
-            ).first()
-            return (
-                [(keys[0], krange["mn"], krange["mx"])]
-                if krange["mn"] is not None
-                else []
-            )
-
+        # the source's key range — LAZY so the uncontended path never
+        # runs it (resolved by _commit_rebased only on a lost race)
         return self._commit_rebased(
             v, "merge", add=add, remove=touched, schema=merged.schema,
-            extra=extra, read_files=touched, probes=_krange_probe,
+            extra=extra, read_files=touched,
+            probes=lambda: self._key_range_probes(source, keys[0]),
+        )
+
+    @staticmethod
+    def _key_range_probes(source: DataFrame, key: str) -> list[tuple]:
+        """The rebase read probe of a merge: ``[(key, min, max)]`` over
+        the source — one tiny agg over the delta side — or ``[]`` for an
+        empty / all-null source."""
+        krange = source.agg(
+            F.min(key).alias("mn"), F.max(key).alias("mx")
+        ).first()
+        return (
+            [(key, krange["mn"], krange["mx"])]
+            if krange["mn"] is not None
+            else []
         )
 
     def delete_where(self, condition: Column | str) -> int:
         """SQL DELETE semantics: rows where the predicate is TRUE are
         removed; FALSE and NULL rows are kept (hence the coalesce)."""
         cond = F.expr(condition) if isinstance(condition, str) else condition
-        v, live, _ = self._snapshot(None)
+        v, live, _, _ = self._snapshot_state(None)
         snapshot = self.read(v)
         extra: dict = {"condition": str(condition)}
         if self.cdf_enabled:
@@ -3680,19 +3569,10 @@ class VersionedTable:
         # this merge should have masked), any removal of a file the DV
         # references, or another DV all conflict.  Probe is lazy: the
         # uncontended path never pays the key-range agg.
-        def _krange_probe():
-            krange = source.agg(
-                F.min(keys[0]).alias("mn"), F.max(keys[0]).alias("mx")
-            ).first()
-            return (
-                [(keys[0], krange["mn"], krange["mx"])]
-                if krange["mn"] is not None
-                else []
-            )
-
         return self._commit_rebased(
             v, "merge_mor", add=add, remove=[], schema=schema,
-            extra=extra, read_files=live, probes=_krange_probe,
+            extra=extra, read_files=live,
+            probes=lambda: self._key_range_probes(source, keys[0]),
         )
 
     def compact_dvs(self) -> int:
@@ -3825,8 +3705,7 @@ class VersionedTable:
     def active_deletion_vectors(self, version: int | None = None) -> list[str]:
         """The DV files masking rows at ``version`` (empty after any
         full-replace rewrite materialized them) — the DESCRIBE surface."""
-        version, _, _ = self._snapshot(version)
-        return sorted(self._resolve_dvs(version))
+        return self._snapshot_state(version)[2]
 
     def compact(self, target_partitions: int = 1) -> int:
         """Bin-pack the live segments into ``target_partitions`` files.
@@ -3834,7 +3713,7 @@ class VersionedTable:
         OPTIMIZE surface of Delta/Iceberg.  This is the WHOLE-set form;
         at scale use :meth:`compact_small`, which never rewrites
         already-big files."""
-        v, live, _ = self._snapshot(None)
+        v, live, _, _ = self._snapshot_state(None)
         df = self.read(v).coalesce(target_partitions)
         add = [self._write_segment(df, v + 1)]
         return self._commit_rebased(
@@ -3911,7 +3790,7 @@ class VersionedTable:
         dataChange=false — streams skip it); no-op when fewer than two
         segments qualify."""
         v, live, dvs, entry = self._snapshot_state(None)
-        pvs = self._live_segment_pvs(v)
+        pvs = {rel: meta["pv"] for rel, meta in self._fold(v).segments.items()}
         targets: list[str] = []
         for rel in live:
             for key, pval in (pvs.get(rel) or {}).items():
@@ -3968,7 +3847,7 @@ class VersionedTable:
         if len(cluster_by) != 2:
             raise ValueError("compact_clustered takes exactly two columns")
         c1, c2 = cluster_by
-        v, live, entry = self._snapshot(None)
+        v, live, _, entry = self._snapshot_state(None)
         df = self.read(v)
         # Quantization bounds from the commit log's own folded stats when
         # every live segment carries them — O(log) driver metadata, no
@@ -4040,121 +3919,6 @@ class VersionedTable:
         )
 
     # ------------------------------------------------------- stats pruning
-    def _live_segment_stats(self, version: int) -> dict[str, dict]:
-        """Stats for every live segment at ``version``, gathered from the
-        commits that ADDED them (stats are immutable with the segment).
-        Checkpoint-accelerated like every other fold: the checkpoint
-        carries the full live-set stats map (Delta's checkpoint add-file
-        stats), so resolution replays only the tail — O(tail) driver
-        metadata per pruned read, and O(tail) per checkpoint write.  A
-        pre-stats-rev checkpoint forces the genesis walk (never wrong,
-        only slower)."""
-        return self._live_segment_meta(version)[0]
-
-    def _live_segment_pvs(self, version: int) -> dict[str, dict]:
-        """Partition tuples for every live segment at ``version`` (see
-        :meth:`_live_segment_meta` — one shared fold with the stats)."""
-        return self._live_segment_meta(version)[1]
-
-    def _live_segment_meta(
-        self, version: int
-    ) -> tuple[dict[str, dict], dict[str, dict]]:
-        """(stats, partition tuples) for every live segment at
-        ``version`` in ONE checkpoint + tail walk — both maps are
-        immutable with their segments and fold identically, and every
-        bounded read needs both (pv pruning runs before the stats
-        fold), so reading the same commit JSON twice would double the
-        planner's metadata I/O for nothing.  Checkpoint-accelerated via
-        the ``stats``/``pvs`` keys; a pre-rev checkpoint lacking either
-        key forces the genesis walk for that map (never wrong, only
-        slower)."""
-        live = self._resolve_live(version)
-        stats_out: dict[str, dict] = {}
-        pvs_out: dict[str, dict] = {}
-        stats_start = 0
-        pvs_start = 0
-        ckpt = self._latest_checkpoint(version)
-        if ckpt is not None:
-            if "stats" in ckpt:
-                stats_out = {
-                    rel: st
-                    for rel, st in ckpt["stats"].items()
-                    if rel in live
-                }
-                stats_start = ckpt["version"] + 1
-            if "pvs" in ckpt:
-                pvs_out = {
-                    rel: pv
-                    for rel, pv in ckpt["pvs"].items()
-                    if rel in live
-                }
-                pvs_start = ckpt["version"] + 1
-        # versions are contiguous by construction (every commit claims
-        # predecessor+1), so the tail is a range — iterating the full
-        # _versions() listing here cost O(history) python work per fold
-        # at deep logs (measured, round 11)
-        for v in range(min(stats_start, pvs_start), version + 1):
-            entry = self._read_commit(v)
-            if v >= stats_start:
-                for rel in entry["add"]:
-                    if rel in live:
-                        stats_out[rel] = entry.get("stats", {}).get(
-                            rel, {}
-                        )
-            if v >= pvs_start:
-                for rel, pv in (entry.get("pv") or {}).items():
-                    if rel in live and pv:
-                        pvs_out[rel] = pv
-        return stats_out, pvs_out
-
-    def _live_segment_commits(self, version: int) -> dict[str, int]:
-        """rel-path → the commit that PHYSICALLY WROTE each live segment
-        at ``version`` (first add from genesis — a RESTORE's
-        re-reference never wins; the audit cares which commit produced
-        the bytes).  Checkpoint-accelerated like the stats fold: the
-        checkpoint carries the live set's map, so resolution replays
-        only the tail.  The ONE commit shape whose ``add`` can
-        re-reference a pre-checkpoint segment is a restore (it records
-        ``restored_from``); its re-added rels fall back to a genesis
-        walk scoped to just those rels — every other op writes fresh
-        uuid-named segments, so a tail-first add IS the physical write.
-        Pre-rev checkpoints lack the key and force the genesis walk
-        (never wrong, only slower)."""
-        live = self._resolve_live(version)
-        out: dict[str, int] = {}
-        start = 0
-        ckpt = self._latest_checkpoint(version)
-        if ckpt is not None and "seg_commits" in ckpt:
-            out = {
-                rel: v
-                for rel, v in ckpt["seg_commits"].items()
-                if rel in live
-            }
-            start = ckpt["version"] + 1
-        pending = set(live) - set(out)
-        refold: set[str] = set()
-        for v in range(start, version + 1):
-            if not pending:
-                break
-            entry = self._read_commit(v)
-            resurrection = "restored_from" in entry
-            for rel in entry["add"]:
-                if rel in pending:
-                    pending.discard(rel)
-                    if resurrection:
-                        refold.add(rel)
-                    else:
-                        out[rel] = v
-        for v in self._versions():
-            if not refold or v > version:
-                break
-            entry = self._read_commit(v)
-            for rel in entry["add"]:
-                if rel in refold:
-                    out[rel] = v
-                    refold.discard(rel)
-        return out
-
     def _stat_names(self, version: int, col: str) -> list[str]:
         """The physical names ``col``'s values may live under in a
         snapshot's segments: the logical name plus its retired rename
@@ -4168,12 +3932,11 @@ class VersionedTable:
         per-segment stats alone — O(log) driver metadata, no Spark job.
         None if any live segment lacks stats for the column (a fold over
         partial stats would silently understate the range)."""
-        version, _, _ = self._snapshot(version)
+        version = self._snapshot_state(version)[0]
         names = self._stat_names(version, col)
-        stats = self._live_segment_stats(version)
         ranges = [
-            next((s[n] for n in names if n in s), None)
-            for s in stats.values()
+            next((meta["stats"][n] for n in names if n in meta["stats"]), None)
+            for meta in self._fold(version).segments.values()
         ]
         if not ranges or any(r is None for r in ranges):
             return None
@@ -4303,13 +4066,13 @@ class VersionedTable:
         eras, evolution gaps): guessing 'not skewed' from partial stats
         could flip the planner the expensive way (same conservative
         policy as table_ndv)."""
-        version, live, _ = self._snapshot(version)
+        version, live, _, _ = self._snapshot_state(version)
         if not live:
             return None
-        stats = self._live_segment_stats(version)
+        segs = self._fold(version).segments
         by_value: dict[str, int] = {}
         for rel in live:
-            m = (stats.get(rel) or {}).get("__mcv__")
+            m = segs[rel]["stats"].get("__mcv__")
             if not isinstance(m, dict):
                 return None
             if col in m:
@@ -4402,15 +4165,15 @@ class VersionedTable:
         way.  Rows masked by deletion vectors still count (sketches are
         per written segment) — NDV is a planning upper estimate, not an
         exact count."""
-        version, live, _ = self._snapshot(version)
+        version, live, _, _ = self._snapshot_state(version)
         if not live:
             return 0
         import base64 as _b64
 
-        stats = self._live_segment_stats(version)
+        segs = self._fold(version).segments
         sketches: list[bytes] = []
         for rel in live:
-            m = (stats.get(rel) or {}).get("__hll__")
+            m = segs[rel]["stats"].get("__hll__")
             if not isinstance(m, dict) or col not in m:
                 return None
             if m[col] is not None:
@@ -4457,7 +4220,7 @@ class VersionedTable:
         # SAME head — a concurrent overwrite between them could otherwise
         # pull an unbounded distinct set driver-side after a stale small
         # estimate approved the collect
-        version, _, _ = self._snapshot(version)
+        version = self._snapshot_state(version)[0]
         ndv = self.table_ndv(col, version)
         if ndv is not None and ndv <= max_inset:
             vals = [
@@ -4489,17 +4252,16 @@ class VersionedTable:
         ``col`` is conservatively scanned — pruning may only ever skip
         provably-disjoint files."""
         names = self._stat_names(version, col)
-        stats, pvs = self._live_segment_meta(version)
+        segs = self._fold(version).segments
         scanned, skipped = [], []
-        for rel in sorted(stats):
+        for rel in sorted(segs):
             if partition_skips(
-                pvs.get(rel), col, lo, hi, is_point=(lo == hi)
+                segs[rel]["pv"], col, lo, hi, is_point=(lo == hi)
             ):
                 skipped.append(rel)
                 continue
-            mn_mx = next(
-                (stats[rel][n] for n in names if n in stats[rel]), None
-            )
+            stats = segs[rel]["stats"]
+            mn_mx = next((stats[n] for n in names if n in stats), None)
             if mn_mx is not None and (mn_mx[1] < lo or mn_mx[0] > hi):
                 skipped.append(rel)
             else:
@@ -4918,9 +4680,9 @@ class VersionedTable:
         retained = versions[-retain_last:]
         keep: set[str] = set()
         for v in retained:
-            keep |= self._resolve_live(v)
+            state = self._fold(v)
             # DVs active at a retained version stay readable with it
-            keep |= self._resolve_dvs(v)
+            keep |= state.live | state.dvs
             # change-data segments live with their commit: the feed of a
             # retained version must stay streamable
             cdf = self._read_commit(v).get("cdf")

@@ -2622,10 +2622,10 @@ def vtable_partition_pruned_scan(spark, sf_dir) -> DataFrame:
         .collect()[0][0]
     )
     scanned_b, skipped_b = vt.pruned_segments(v, "o_custkey", k, k)
-    pvs = vt._live_segment_pvs(v)
+    segs = vt._fold(v).segments
     bkey = "bucket(o_custkey,8)"
-    planned_b = sum(1 for r in scanned_b if bkey in pvs.get(r, {}))
-    skipped_bn = sum(1 for r in skipped_b if bkey in pvs.get(r, {}))
+    planned_b = sum(1 for r in scanned_b if bkey in (segs[r]["pv"] or {}))
+    skipped_bn = sum(1 for r in skipped_b if bkey in (segs[r]["pv"] or {}))
     krows = vt.read_pruned("o_custkey", k, k).filter(F.col("o_custkey") == k)
     row_b = krows.agg(
         F.count(F.lit(1)).cast("long").alias("n_rows"),

@@ -320,7 +320,7 @@ class VtableBatchReader(DataSourceReader):
             )
 
             vt = VersionedTable(None, self.root)
-            stats, pvs = vt._live_segment_meta(self.version)
+            segs = vt._fold(self.version).segments
             bloom_cols, _, _ = vt.bloom_props
             survivors = []
             for rel in self.live:
@@ -329,12 +329,12 @@ class VtableBatchReader(DataSourceReader):
                     # partition-value pruning FIRST (Iceberg order):
                     # pure tuple comparison, no stats or bloom I/O
                     if partition_skips(
-                        pvs.get(rel), col, lo, hi, is_point=is_point
+                        segs[rel]["pv"], col, lo, hi, is_point=is_point
                     ):
                         keep = False
                         break
                     names = [col, *self.chains.get(col, [])]
-                    seg_stats = stats.get(rel, {})
+                    seg_stats = segs[rel]["stats"]
                     mn_mx = next(
                         (seg_stats[n] for n in names if n in seg_stats),
                         None,
@@ -645,7 +645,7 @@ class VtableBatchWriter(DataSourceArrowWriter):
             if add and current != enforced:
                 vt._enforce_constraints(add, current, "write")
                 enforced = current
-            remove = sorted(vt._resolve_live(v)) if self.overwrite else []
+            remove = sorted(vt._fold(v).segments) if self.overwrite else []
             try:
                 vt._commit(
                     v + 1,

@@ -248,7 +248,7 @@ def main() -> None:
     )
     vt = VersionedTable.create(spark, root, li_c)
     seg_dir = os.path.join(
-        root, sorted(vt._resolve_live(vt.latest_version()))[0]
+        root, vt._snapshot_state(None)[1][0]
     )
 
     def scan_agg(df):
@@ -518,7 +518,7 @@ def main() -> None:
         F.col("id").cast("int").alias("k"), (F.col("id") * 2.0).alias("p")
     )
     dvt = VersionedTable.create(spark, droot, ddf)
-    seed_rel = sorted(dvt._resolve_live(0))[0]
+    seed_rel = dvt._snapshot_state(0)[1][0]
     n_deep = int(os.environ.get("SPARK_GRAFT_DEEP_COMMITS", "10000"))
     ckpt_ms: list[float] = []
     t0 = time.perf_counter()
@@ -540,13 +540,13 @@ def main() -> None:
         "commits": n_deep,
         "build_sec_total": build_s,
         "snapshot_resolution_ms": round(
-            best_of(lambda: fresh._snapshot(None)) * 1000, 1
+            best_of(lambda: fresh._snapshot_state(None)) * 1000, 1
         ),
         "live_stats_fold_ms": round(
-            best_of(lambda: fresh._live_segment_stats(n_deep)) * 1000, 1
+            best_of(lambda: fresh._fold(n_deep)) * 1000, 1
         ),
         "time_travel_mid_ms": round(
-            best_of(lambda: fresh._snapshot(n_deep // 2)) * 1000, 1
+            best_of(lambda: fresh._snapshot_state(n_deep // 2)) * 1000, 1
         ),
         "checkpoint_commit_ms_first_last": [
             round(ckpt_ms[0], 1), round(ckpt_ms[-1], 1)

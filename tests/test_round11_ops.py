@@ -430,7 +430,7 @@ def test_snapshot_resolution_reads_bounded_tail(spark, root, monkeypatch):
     import energy_emissions_lakehouse_spark.operators.vtable as vmod
 
     vt = VersionedTable.create(spark, root, _rows(spark, 0, 10))
-    seed = sorted(vt._resolve_live(0))[0]
+    seed = vt._snapshot_state(0)[1][0]
     for v in range(1, 4 * vmod.CHECKPOINT_EVERY + 3):
         rel = os.path.join(
             "data", f"{v:020d}-{os.urandom(4).hex()}"
@@ -451,7 +451,7 @@ def test_snapshot_resolution_reads_bounded_tail(spark, root, monkeypatch):
         return orig(self, version)
 
     monkeypatch.setattr(VersionedTable, "_read_commit", counting)
-    fresh._snapshot(None)
+    fresh._snapshot_state(None)
     assert calls["n"] <= vmod.CHECKPOINT_EVERY + 3, (
         f"head resolution read {calls['n']} commits at depth "
         f"{vt.latest_version()} — the checkpointed fold is unbounded"
@@ -462,8 +462,6 @@ def test_incremental_checkpoint_equals_genesis_state(spark, root):
     """Checkpoints now fold from the previous checkpoint + tail; their
     recorded live/dv sets must equal the genesis walk's across a
     history with removes, MOR deletes and a compaction."""
-    import json as _json
-
     import energy_emissions_lakehouse_spark.operators.vtable as vmod
 
     vt = VersionedTable.create(spark, root, _rows(spark, 0, 50))
@@ -475,15 +473,14 @@ def test_incremental_checkpoint_equals_genesis_state(spark, root):
     while vt.latest_version() % vmod.CHECKPOINT_EVERY != 0:
         vt.append(_rows(spark, 9000, 9010))
     head = vt.latest_version()
-    with open(vt._checkpoint_path(head)) as fh:
-        ckpt = _json.load(fh)
-    # round 12: the on-disk form is main + sidecars; hydrate to the
-    # legacy view shape the assertions below pin
-    ckpt = vt._hydrate_checkpoint(ckpt)
-    live_g, dvs_g = vt._resolve_state(head, use_checkpoint=False)
-    assert sorted(ckpt["live"]) == sorted(live_g)
-    assert sorted(ckpt["dvs"]) == sorted(dvs_g)
-    assert ckpt["txns"] == vt._resolve_txns(head, use_checkpoint=False)
+    # a fresh handle's fold at the head IS the on-disk checkpoint
+    fresh = VersionedTable(spark, root)
+    ckpt = fresh._fold(head)
+    assert {r for _, rels in ckpt.sidecars for r in rels} == ckpt.live
+    genesis = fresh._fold(head, use_checkpoint=False)
+    assert ckpt.live == genesis.live
+    assert ckpt.dvs == genesis.dvs
+    assert ckpt.txns == genesis.txns
 
 
 # ------------------------------------------- byte-based stream rate cap
@@ -612,5 +609,5 @@ def test_ndv_and_bytes_survive_checkpoint_boundary(spark, root):
     )
     fresh = VersionedTable(spark, root)
     assert fresh.table_ndv("g") == 13
-    stats = fresh._live_segment_stats(head)
-    assert all("__bytes__" in st for st in stats.values())
+    segs = fresh._fold(head).segments
+    assert all("__bytes__" in m["stats"] for m in segs.values())

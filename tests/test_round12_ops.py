@@ -4,8 +4,7 @@ Sidecar checkpoints (verdict item 2): checkpoint-commit cost must be
 O(tail + dirty sidecars), not O(live) — the main checkpoint file carries
 only the small folds plus references to immutable per-SIDECAR_MAX-segment
 sidecar files, and consecutive checkpoints REUSE every sidecar the tail
-didn't touch.  Hydration must reproduce exactly the legacy inline views
-every consumer fold reads.
+didn't touch.  The checkpointed fold must equal the genesis fold.
 """
 
 from __future__ import annotations
@@ -66,18 +65,16 @@ def test_checkpoint_is_sidecar_form_and_hydrates_exact(spark, root):
     raw = _ckpt_raw(vt, head)
     assert "sidecars" in raw and "live" not in raw and "stats" not in raw
     assert _sidecar_files(root), "sidecar files must exist on disk"
-    # a FRESH handle (disk hydration path) folds exactly the genesis walk
+    # a FRESH handle (disk read path) folds exactly the genesis walk
     fresh = VersionedTable(spark, root)
-    live_g, dvs_g = fresh._resolve_state(head, use_checkpoint=False)
-    ckpt = fresh._latest_checkpoint(head)
-    assert sorted(ckpt["live"]) == sorted(live_g)
-    assert sorted(ckpt["dvs"]) == sorted(dvs_g)
-    assert set(ckpt["stats"]) == set(live_g)
-    assert set(ckpt["seg_commits"]) == set(live_g)
-    # and the consumer folds serve identical answers via the checkpoint
-    assert fresh._live_segment_stats(head) == {
-        rel: fresh._read_commit(v).get("stats", {}).get(rel, {})
-        for rel, v in fresh._live_segment_commits(head).items()
+    state = fresh._fold(head)
+    assert state == fresh._fold(head, use_checkpoint=False)
+    # ...and really started from the checkpoint's sidecars
+    assert {r for _, rels in state.sidecars for r in rels} == state.live
+    # every segment serves the stats its writing commit recorded
+    assert {rel: m["stats"] for rel, m in state.segments.items()} == {
+        rel: fresh._read_commit(m["commit"]).get("stats", {}).get(rel, {})
+        for rel, m in state.segments.items()
     }
 
 
@@ -99,12 +96,10 @@ def test_consecutive_checkpoints_reuse_clean_sidecars(
     assert reused == set(refs1[:-1]), (
         f"clean sidecars must be reused by name: {refs1} vs {refs2}"
     )
-    # and the second checkpoint's hydrated state is exact
+    # and the second checkpoint's state is exact from a fresh handle
     head = 2 * CHECKPOINT_EVERY
-    ckpt = vt._hydrate_checkpoint(_ckpt_raw(vt, head))
-    assert sorted(ckpt["live"]) == sorted(
-        vt._resolve_live(head, use_checkpoint=False)
-    )
+    fresh = VersionedTable(spark, root)
+    assert fresh._fold(head) == fresh._fold(head, use_checkpoint=False)
 
 
 def test_full_rewrite_replaces_every_sidecar(spark, root, monkeypatch):
@@ -120,10 +115,9 @@ def test_full_rewrite_replaces_every_sidecar(spark, root, monkeypatch):
     head = _to_boundary(vt, spark)
     refs2 = [s["name"] for s in _ckpt_raw(vt, head)["sidecars"]]
     assert set(refs2).isdisjoint(set(refs1))
-    # and hydration must stay exact
-    ckpt = vt._hydrate_checkpoint(_ckpt_raw(vt, head))
-    live_g = vt._resolve_live(head, use_checkpoint=False)
-    assert sorted(ckpt["live"]) == sorted(live_g)
+    # and the checkpointed fold must stay exact
+    fresh = VersionedTable(spark, root)
+    assert fresh._fold(head) == fresh._fold(head, use_checkpoint=False)
 
 
 def test_partial_remove_reuses_untouched_sidecars(
@@ -141,10 +135,10 @@ def test_partial_remove_reuses_untouched_sidecars(
     head = _to_boundary(vt, spark)
     refs2 = [s["name"] for s in _ckpt_raw(vt, head)["sidecars"]]
     assert set(refs1[:-1]) <= set(refs2), "MOR delete must not dirty data sidecars"
-    ckpt = vt._hydrate_checkpoint(_ckpt_raw(vt, head))
-    assert sorted(ckpt["dvs"]) == sorted(
-        vt._resolve_dvs(head, use_checkpoint=False)
-    )
+    fresh = VersionedTable(spark, root)
+    assert fresh._fold(head).dvs == fresh._fold(
+        head, use_checkpoint=False
+    ).dvs
 
 
 def test_restore_in_tail_falls_back_to_full_fold(spark, root):
@@ -159,14 +153,15 @@ def test_restore_in_tail_falls_back_to_full_fold(spark, root):
     head = _to_boundary(vt, spark)
     assert head >= CHECKPOINT_EVERY
     fresh = VersionedTable(spark, root)
-    ckpt = fresh._latest_checkpoint(head)
-    live_g = fresh._resolve_live(ckpt["version"], use_checkpoint=False)
-    assert sorted(ckpt["live"]) == sorted(live_g)
+    state = fresh._fold(head)
+    assert state.sidecars, "the fold must start from the checkpoint"
+    assert state == fresh._fold(head, use_checkpoint=False)
     # physical-writer provenance survives the resurrection (restore's
     # re-add must NOT claim the restore commit as the writer)
-    commits = fresh._live_segment_commits(head)
     assert all(
-        rel in fresh._read_commit(v)["add"] for rel, v in commits.items()
+        rel in fresh._read_commit(m["commit"])["add"]
+        and fresh._read_commit(m["commit"])["op"] != "restore"
+        for rel, m in state.segments.items()
     )
     # reads stay exact end-to-end (restored state + boundary filler)
     assert sorted(r.k for r in fresh.read().collect()) == sorted(
@@ -187,9 +182,7 @@ def test_missing_sidecar_falls_back_to_older_state(spark, root):
     fresh = VersionedTable(spark, root)
     # the broken checkpoint is dropped; folds fall back (genesis here)
     # and serve the exact state
-    assert sorted(fresh._resolve_live(head)) == sorted(
-        fresh._resolve_live(head, use_checkpoint=False)
-    )
+    assert fresh._fold(head) == fresh._fold(head, use_checkpoint=False)
     assert fresh.read().count() == 30 + 5 * (CHECKPOINT_EVERY + 1)
 
 
@@ -362,11 +355,12 @@ def test_vacuum_reclaims_crash_orphaned_sidecars(spark, root, monkeypatch):
         os.path.basename(d) for d in deleted if d.endswith(".sidecar.json")
     } == orphans
     assert _sidecar_files(root) == referenced
-    # the surviving checkpoint still hydrates; reads untouched
+    # the surviving checkpoint still loads; reads untouched
     fresh = VersionedTable(spark, root)
-    assert fresh._latest_checkpoint(
-        fresh.latest_version()
-    )["version"] == CHECKPOINT_EVERY
+    state = fresh._fold(fresh.latest_version())
+    assert {
+        name for name, _ in state.sidecars
+    } == referenced, "the fold must start from the surviving checkpoint"
     assert fresh.read().count() == n_before
 
 
@@ -424,7 +418,7 @@ def test_racing_writers_publish_exact_checkpoints(spark, root):
     """Two writer threads racing idempotent appends across several
     checkpoint boundaries: whatever subset of checkpoints actually
     publishes (best-effort under contention), every published one must
-    hydrate to exactly the genesis fold at its version."""
+    fold to exactly the genesis fold at its version."""
     import threading
 
     vt0 = VersionedTable.create(spark, root, _rows(spark, 0, 5))
@@ -456,55 +450,11 @@ def test_racing_writers_publish_exact_checkpoints(spark, root):
         if not os.path.exists(fresh._checkpoint_path(cv)):
             continue  # lost to a concurrent-commit race: legal
         n_published += 1
-        ckpt = fresh._hydrate_checkpoint(_ckpt_raw(fresh, cv))
-        live_g, dvs_g = fresh._resolve_state(cv, use_checkpoint=False)
-        assert sorted(ckpt["live"]) == sorted(live_g), f"v{cv} live"
-        assert sorted(ckpt["dvs"]) == sorted(dvs_g), f"v{cv} dvs"
-        assert set(ckpt["stats"]) == set(live_g), f"v{cv} stats"
-        assert ckpt["txns"] == fresh._resolve_txns(
-            cv, use_checkpoint=False
-        ), f"v{cv} txns"
+        state = fresh._fold(cv)
+        loaded = {r for _, rels in state.sidecars for r in rels}
+        assert loaded == state.live, f"v{cv} checkpoint not loaded"
+        assert state == fresh._fold(cv, use_checkpoint=False), f"v{cv}"
     assert n_published >= 1, "no checkpoint published across 4 boundaries"
-
-
-def test_legacy_inline_checkpoint_upgrades_to_sidecars(spark, root):
-    """A round-11-format INLINE checkpoint on disk: reads hydrate it
-    as-is, and the NEXT checkpoint write upgrades to sidecar form with
-    exact state."""
-    vt = VersionedTable.create(spark, root, _rows(spark, 0, 20))
-    for i in range(1, CHECKPOINT_EVERY + 1):
-        vt.append(_rows(spark, 100 * i, 100 * i + 5))
-    # rewrite the sidecar checkpoint as the legacy inline form
-    cpath = vt._checkpoint_path(CHECKPOINT_EVERY)
-    hydrated = vt._hydrate_checkpoint(_ckpt_raw(vt, CHECKPOINT_EVERY))
-    legacy = {
-        k: hydrated[k]
-        for k in ("version", "live", "txns", "dvs", "constraints",
-                  "stats", "seg_commits", "pvs")
-    }
-    with open(cpath, "w") as fh:
-        json.dump(legacy, fh)
-    for n in _sidecar_files(root):  # r11 logs have no sidecar files
-        os.unlink(os.path.join(root, vmod.LOG_DIR, n))
-    # a FRESH handle reads the legacy form exactly
-    fresh = VersionedTable(spark, root)
-    ckpt = fresh._latest_checkpoint(CHECKPOINT_EVERY)
-    assert "sidecars" not in ckpt
-    assert sorted(ckpt["live"]) == sorted(
-        fresh._resolve_live(CHECKPOINT_EVERY, use_checkpoint=False)
-    )
-    # drive to the next boundary: the new checkpoint must be sidecar
-    # form (upgrade) and exact
-    for i in range(CHECKPOINT_EVERY):
-        fresh.append(_rows(spark, 5000 + 10 * i, 5000 + 10 * i + 5))
-    head = fresh.latest_version()
-    raw = _ckpt_raw(fresh, head)
-    assert "sidecars" in raw and "live" not in raw
-    up = fresh._hydrate_checkpoint(raw)
-    assert sorted(up["live"]) == sorted(
-        fresh._resolve_live(head, use_checkpoint=False)
-    )
-    assert fresh.read().count() == 20 + 5 * (2 * CHECKPOINT_EVERY)
 
 
 # ----------------------- startingVersion / startingTimestamp (Delta)

@@ -2,17 +2,18 @@
 protocol (operators/vtable.py, operators/catalog.py): writers killed
 between segment write and commit, ``os.link`` failures mid-claim,
 hard-crash scratch litter, a mis-configured vacuum racing an in-flight
-writer, torn segment directories, catalog pointer-swap crashes, and
-checkpoint write failures.  Invariants asserted throughout: the HEAD
-READ STAYS SERVEABLE after every injected fault, every orphan is
-eventually swept, and no fault can publish a reference to bytes that
-do not exist (reference semantics:
+writer, torn segment directories, catalog pointer-swap crashes,
+checkpoint write failures and torn checkpoint files.  Invariants
+asserted throughout: the HEAD READ STAYS SERVEABLE after every
+injected fault, every orphan is eventually swept, and no fault can
+publish a reference to bytes that do not exist (reference semantics:
 /root/reference/src/30_load/load_to_postgres.py's engine.begin()
 all-or-nothing contract, generalized to the file log)."""
 
 from __future__ import annotations
 
 import errno
+import json
 import os
 import shutil
 import tempfile
@@ -279,9 +280,35 @@ def test_checkpoint_write_failure_never_fails_the_commit(spark, base):
     assert ckpts == []  # every checkpoint publish was injected dead
     assert _log_scratch(root) == []
     assert vt.read().count() == 2 + 5 * (CHECKPOINT_EVERY + 2)
-    assert vt._resolve_live(head) == vt._resolve_live(
-        head, use_checkpoint=False
-    )
+    assert vt._fold(head) == vt._fold(head, use_checkpoint=False)
+
+
+def test_torn_checkpoint_files_fall_back_to_older_state(spark, base):
+    """A crash between a checkpoint file's rename and its data flush
+    leaves a zero-length or cut-off JSON under the final name: a fresh
+    handle must treat it like a missing checkpoint — fall back to an
+    older one, or to the log — and serve exactly the committed rows."""
+    root = os.path.join(base, "t")
+    vt = _mk(spark, root, n=20)
+    for i in range(2 * CHECKPOINT_EVERY + 1):
+        vt.append(_batch(spark, 100 + 10 * i, 105 + 10 * i))
+    head = vt.latest_version()
+    want = sorted((r.k, r.v) for r in vt.read().collect())
+    assert len(want) == 20 + 5 * (2 * CHECKPOINT_EVERY + 1)
+    log = os.path.join(root, LOG_DIR)
+    # the newest checkpoint's main file: zero bytes
+    open(vt._checkpoint_path(2 * CHECKPOINT_EVERY), "w").close()
+    fresh = VersionedTable(spark, root)
+    assert sorted((r.k, r.v) for r in fresh.read().collect()) == want
+    # ...and a sidecar of the older one: cut in half
+    older = vt._checkpoint_path(CHECKPOINT_EVERY)
+    with open(older) as fh:
+        sidecar = os.path.join(log, json.load(fh)["sidecars"][0]["name"])
+    with open(sidecar, "r+") as fh:
+        fh.truncate(os.path.getsize(sidecar) // 2)
+    fresh = VersionedTable(spark, root)
+    assert sorted((r.k, r.v) for r in fresh.read().collect()) == want
+    assert fresh._fold(head) == fresh._fold(head, use_checkpoint=False)
 
 
 def test_chaos_soak_dml_under_rogue_zero_grace_vacuum(spark, base):
@@ -518,7 +545,7 @@ def test_clone_racing_vacuum_skips_vanished_file_loudly(
     dest = os.path.join(base, "c")
 
     # find v0's (historic) segment: referenced by v0, not live at head
-    live = set(vt._resolve_live(vt.latest_version()))
+    live = vt._fold(vt.latest_version()).live
     v0_segs = set(vt._read_commit(0)["add"]) - live
     assert v0_segs
     victim = next(iter(v0_segs))

@@ -156,22 +156,25 @@ def test_random_dml_program_matches_model_and_history(spark, root):
         assert _table_state(vt, v) == snap, f"time travel to v{v} diverged"
     # ---- and the change feed spans the whole history without gaps
     assert vt._versions() == list(range(vt.latest_version() + 1))
-    # ---- round 12: whatever random program ran, every checkpoint's
-    # hydrated sidecar state must equal the genesis fold at its version
-    # (restores, full rewrites, MOR DVs, compactions included)
-    head = vt.latest_version()
-    for cv in range(0, head + 1):
-        if cv == 0 or cv % vt_mod.CHECKPOINT_EVERY != 0:
-            continue
+    _assert_checkpoints_exact(spark, root)
+
+
+def _assert_checkpoints_exact(spark, root):
+    """Whatever random program ran, every checkpoint a fresh handle reads
+    back from disk must fold to exactly the genesis fold at its version —
+    every field of the state (live set with each segment's stats,
+    partition tuple and writing commit; DVs; txns; constraints), across
+    restores, full rewrites, MOR DVs and compactions."""
+    vt = VersionedTable(spark, root)
+    every = vt_mod.CHECKPOINT_EVERY
+    for cv in range(every, vt.latest_version() + 1, every):
         if not os.path.exists(vt._checkpoint_path(cv)):
             continue  # best-effort publishes may legitimately be absent
-        ckpt = vt._hydrate_checkpoint(
-            json.load(open(vt._checkpoint_path(cv)))
-        )
-        live_g, dvs_g = vt._resolve_state(cv, use_checkpoint=False)
-        assert sorted(ckpt["live"]) == sorted(live_g), f"ckpt v{cv} live"
-        assert sorted(ckpt["dvs"]) == sorted(dvs_g), f"ckpt v{cv} dvs"
-        assert set(ckpt["stats"]) == set(live_g), f"ckpt v{cv} stats"
+        with open(vt._checkpoint_path(cv)) as fh:
+            names = [ref["name"] for ref in json.load(fh)["sidecars"]]
+        ckpt = vt._fold(cv)
+        assert [n for n, _ in ckpt.sidecars] == names, f"ckpt v{cv} unread"
+        assert ckpt == vt._fold(cv, use_checkpoint=False), f"ckpt v{cv}"
 
 
 # --------------------------------------------------------------------------
@@ -329,6 +332,7 @@ def test_random_program_with_evolution_merge_and_clone(spark, root):
         )
         assert vt.latest_version() == src_head, "clone commit leaked back"
         assert 999_999 not in _state_ev(vt), "clone data leaked back"
+    _assert_checkpoints_exact(spark, root)
 
 
 # --------------------------------------------------------------------------
@@ -454,3 +458,4 @@ def test_random_program_with_rename_and_drop(spark, root):
         got = {k: tuple(sorted(vs)) for k, vs in out.items()}
         assert got == rec["snap"], f"time travel to v{v} diverged"
     assert vt._versions() == list(range(vt.latest_version() + 1))
+    _assert_checkpoints_exact(spark, root)
