@@ -56,12 +56,15 @@ Scale notes (100 TB): data operations are ordinary distributed Spark
 jobs over parquet; only O(#segments) path metadata ever crosses the
 driver, exactly like Delta's log.  Commits fold per-segment min/max
 column stats from the parquet footers (Iceberg manifests), which powers
-file-level range pruning (:meth:`read_pruned`) and the touched-file
-MERGE (:meth:`merge_upsert_pruned` — only segments whose key range
-overlaps the source are rewritten; ``merge_upsert``/``delete_where``
-remain the whole-set copy-on-write forms).  On a real cluster the log
-lives on an object store with conditional-put (or a log store service)
-instead of POSIX ``link``.
+file-level range pruning (:meth:`read_pruned`).  DML runs through two
+cores.  Copy-on-write (``delete_where``, ``update_where``,
+``merge_upsert``, the replaceWhere family) rewrites only the touched
+segments — those holding a predicate match, or for MERGE those whose key
+range overlaps the source — and leaves every other segment live.
+Merge-on-read (the ``_mor`` methods) rewrites nothing: it masks the
+matched rows with a deletion vector and appends any new images.  On a
+real cluster the log lives on an object store with conditional-put (or a
+log store service) instead of POSIX ``link``.
 """
 
 from __future__ import annotations
@@ -69,6 +72,7 @@ from __future__ import annotations
 import base64
 import bisect
 import dataclasses
+import functools
 import hashlib
 import json
 import os
@@ -489,6 +493,26 @@ def _violation_pred(expr_sql: str) -> Column:
     must be spelled explicitly (``c IS NOT NULL``), exactly like ANSI
     table constraints and Delta's CHECK."""
     return ~F.coalesce(F.expr(expr_sql), F.lit(True))
+
+
+def _match(condition: Column | str) -> Column:
+    """The rows a DML predicate selects: TRUE only — FALSE and UNKNOWN
+    (null) rows are kept, the SQL DELETE/UPDATE semantics."""
+    cond = F.expr(condition) if isinstance(condition, str) else condition
+    return F.coalesce(cond, F.lit(False))
+
+
+def _updated(
+    rows: DataFrame, assigns: dict[str, Column]
+) -> tuple[DataFrame, DataFrame]:
+    """(post-images, update_preimage/update_postimage change rows) of an
+    UPDATE applying the resolved SET list ``assigns`` to ``rows``."""
+    post = rows.select(
+        *[assigns.get(c, F.col(c)).alias(c) for c in rows.columns]
+    )
+    return post, rows.withColumn(
+        "_change_type", F.lit("update_preimage")
+    ).unionByName(post.withColumn("_change_type", F.lit("update_postimage")))
 
 
 def _check_constraint_defs(
@@ -1344,13 +1368,13 @@ class VersionedTable:
           carries the stats, partition tuple and version of the commit
           that WROTE it; a restore re-references its target's segments
           and takes their metadata from the fold at that target.
-        - DVs: a FULL-replace commit (overwrite / copy-on-write delete /
-          compact / whole-set merge) materializes every DV through the
-          read path it rewrote from, so the DV set resets to empty there.
-          Partial rewrites (merge_upsert_pruned) keep DVs active: rows of
-          removed segments simply stop matching (segment names are never
-          reused), so a stale DV entry can only be dead weight, never a
-          wrong delete.
+        - DVs: a commit removing the whole live set (overwrite / compact
+          / a copy-on-write DML that touched every segment) materializes
+          every DV through the read path it rewrote from, so the DV set
+          resets to empty there.  Partial rewrites keep DVs active: rows
+          of removed segments simply stop matching (segment names are
+          never reused), so a stale DV entry can only be dead weight,
+          never a wrong delete.
         - txns: single writer per source with increasing batch ids (the
           structured-streaming model), so the latest entry subsumes all
           earlier ones.
@@ -2261,6 +2285,11 @@ class VersionedTable:
             *data_cols, "_commit_version"
         )
 
+    def _head_schema(self) -> StructType:
+        return StructType.fromJson(
+            self._read_commit(self.latest_version())["schema"]
+        )
+
     def _require_schema(self, df: DataFrame, op: str) -> DataFrame:
         """Schema-on-write enforcement (Delta semantics): mixed-type
         segments under one log would poison every later read, so an
@@ -2275,9 +2304,7 @@ class VersionedTable:
         type-widening write path does the same, so old producers keep
         working across the DDL.  Any difference that is not a pure
         lossless widening stays a hard error."""
-        current = StructType.fromJson(
-            self._read_commit(self.latest_version())["schema"]
-        )
+        current = self._head_schema()
         got = [(f.name, f.dataType) for f in df.schema.fields]
         want = [(f.name, f.dataType) for f in current.fields]
         if got == want:
@@ -2881,23 +2908,21 @@ class VersionedTable:
         the predicate and INSERT ``df``, in ONE commit — the periodic-
         reload shape (recompute one slice of a 100 TB table without
         touching the rest).  Touched-file discovery is EXACT via the
-        pushed-down predicate (:meth:`_matched_segments`); segments with
-        no matching row stay live untouched, and the touched ones are
-        rewritten keeping only their non-matching rows (through a
-        DV-aware read, so their deletion vectors materialize with the
-        rewrite).  Every ``df`` row must satisfy the predicate — the
-        Delta replaceWhere contract — validated against the WRITTEN
-        batch (O(delta), one footer-backed scan); a violating batch is
-        rejected with the table unchanged.  Predicate UNKNOWN (null)
-        rows are kept, like SQL DELETE.  For a pure range predicate
-        prefer :meth:`overwrite_range`, which additionally keeps
-        stats-disjoint files out of the discovery scan entirely.  On CDF
-        tables the commit carries delete rows for the replaced slice and
-        insert rows for the batch."""
-        cond = F.expr(condition) if isinstance(condition, str) else condition
-        v, live, dvs, entry = self._snapshot_state(None)
-        return self._replace_slice(
-            df, cond, str(condition), live, [], v, dvs, entry
+        pushed-down predicate; segments with no matching row stay live
+        untouched, and the touched ones are rewritten keeping only their
+        non-matching rows (see :meth:`_copy_on_write`).  Every ``df`` row
+        must satisfy the predicate — the Delta replaceWhere contract —
+        validated against the WRITTEN batch (O(delta), one footer-backed
+        scan); a violating batch is rejected with the table unchanged.
+        Predicate UNKNOWN (null) rows are kept, like SQL DELETE.  For a
+        pure range predicate prefer :meth:`overwrite_range`, which
+        additionally keeps stats-disjoint files out of the discovery scan
+        entirely.  On CDF tables the commit carries delete rows for the
+        replaced slice and insert rows for the batch."""
+        return self._copy_on_write(
+            "replace_where", {"condition": str(condition)},
+            match=_match(condition),
+            batch=self._require_schema(df, "overwrite_where"),
         )
 
     def overwrite_range(self, df: DataFrame, col: str, lo, hi) -> int:
@@ -2911,12 +2936,11 @@ class VersionedTable:
         files truly holding matching rows.  On a range-clustered layout
         the whole reload plans from O(log) metadata plus a scan of the
         overlapping files only."""
-        v, live, dvs, entry = self._snapshot_state(None)
-        candidates, skipped = self.pruned_segments(v, col, lo, hi)
-        cond = (F.col(col) >= F.lit(lo)) & (F.col(col) <= F.lit(hi))
-        return self._replace_slice(
-            df, cond, f"{col} BETWEEN {lo} AND {hi}", candidates, skipped,
-            v, dvs, entry, probes=[(col, lo, hi)],
+        return self._copy_on_write(
+            "replace_where", {"condition": f"{col} BETWEEN {lo} AND {hi}"},
+            match=_match(F.col(col).between(F.lit(lo), F.lit(hi))),
+            batch=self._require_schema(df, "overwrite_where"),
+            prune=(col, lo, hi),
         )
 
     def replace_where_segment(
@@ -2932,199 +2956,46 @@ class VersionedTable:
         O(delta)) and the batch passes the active CHECK constraints —
         a rejected batch deletes the segment and leaves the table
         unchanged.  ``new_rel=None`` is the empty batch: a pure
-        predicate delete."""
-        cond = F.expr(condition) if isinstance(condition, str) else condition
-        v, live, dvs, entry = self._snapshot_state(None)
-        if new_rel is not None:
-            cons = self.constraints(v)
-            if cons:
-                self._enforce_constraints([new_rel], cons, "replace_where")
-        return self._replace_slice(
-            None, cond, str(condition), live, [], v, dvs, entry,
-            new_rel=new_rel,
+        predicate delete.  A zero-row ``new_rel`` is reclaimed only
+        after the commit settles, so a caller retrying a lost race can
+        hand the same segment back in."""
+        return self._copy_on_write(
+            "replace_where", {"condition": str(condition)},
+            match=_match(condition), batch=new_rel,
         )
-
-    def _replace_slice(
-        self,
-        df: DataFrame | None,
-        cond: Column,
-        cond_desc: str,
-        candidates: list[str],
-        skipped: list[str],
-        v: int,
-        dvs: list[str],
-        entry: dict,
-        new_rel: str | None = None,
-        probes: list[tuple] | None = None,
-    ) -> int:
-        """Shared replaceWhere core: exact touched discovery over
-        ``candidates`` (``skipped`` were already proven disjoint from log
-        stats), rewrite of the touched segments minus their matching
-        rows, the validated batch appended, one atomic commit.  The
-        batch arrives either as a DataFrame (``df``, written here) or as
-        an already-written segment (``new_rel``, the sink path — may be
-        None for an empty batch)."""
-        if df is not None:
-            df = self._require_schema(df, "overwrite_where")
-        schema = StructType.fromJson(entry["schema"])
-        data_cols = [f.name for f in schema.fields]
-        match = F.coalesce(cond, F.lit(False))
-        touched: list[str] = []
-        if candidates:
-            scan = self._scan_segments(
-                v, candidates, schema, dvs=dvs, keep_identity=True
-            )
-            touched = self._matched_segments(scan, match, candidates)
-        # the batch lands (and is validated) before the slice rewrite:
-        # a rejected batch must cost nothing but its own write
-        if df is not None:
-            new_rel = self._write_segment(df, v + 1)
-        if new_rel is not None:
-            n_bad = (
-                self.spark.read.schema(schema)
-                .parquet(os.path.join(self.root, new_rel))
-                .where(~match)
-                .limit(1)
-                .count()
-            )
-            if n_bad:
-                shutil.rmtree(
-                    os.path.join(self.root, new_rel), ignore_errors=True
-                )
-                raise ValueError(
-                    "overwrite_where: replacement rows must ALL satisfy "
-                    f"the predicate ({cond_desc}) — batch rejected, table "
-                    "unchanged (the Delta replaceWhere contract)"
-                )
-        add = [new_rel] if new_rel is not None else []
-        empty_new: str | None = None
-        if new_rel is not None and self._segment_rows(new_rel) == 0:
-            # an empty batch is a pure predicate delete — don't register
-            # a zero-row segment as dead weight in every later scan.
-            # Deleted only AFTER the commit settles: a caller retrying a
-            # lost commit race may hand the same segment back in, and a
-            # pre-commit delete would make that retry read a vanished
-            # directory.  (On a lost race it stays as a vacuumable
-            # orphan until the retry resolves it the same way.)
-            empty_new = new_rel
-            add = []
-            new_rel = None
-        if not add and not touched:
-            if empty_new is not None:
-                shutil.rmtree(
-                    os.path.join(self.root, empty_new), ignore_errors=True
-                )
-            return v  # nothing deleted, nothing inserted: no-op
-        extra: dict = {
-            "condition": cond_desc,
-            "rewritten": len(touched),
-            "preserved": len(candidates) - len(touched) + len(skipped),
-        }
-        if skipped:
-            extra["stats_skipped"] = len(skipped)
-        if touched:
-            slice_df = self._scan_segments(v, touched, schema, dvs=dvs)
-            if self.cdf_enabled:
-                # the kept rewrite and the delete feed share one scan
-                slice_df = slice_df.persist()
-            try:
-                kept_rel = self._write_segment(
-                    slice_df.where(~match).select(*data_cols), v + 1
-                )
-                if self._segment_rows(kept_rel) == 0:
-                    # every row of every touched segment matched
-                    shutil.rmtree(
-                        os.path.join(self.root, kept_rel),
-                        ignore_errors=True,
-                    )
-                else:
-                    add.append(kept_rel)
-                if self.cdf_enabled:
-                    deletes = (
-                        slice_df.where(match)
-                        .select(*data_cols)
-                        .withColumn("_change_type", F.lit("delete"))
-                    )
-                    changes = deletes
-                    if new_rel in add:
-                        # insert images from the batch ALREADY WRITTEN —
-                        # the input plan never recomputes
-                        changes = deletes.unionByName(
-                            self.spark.read.schema(schema)
-                            .parquet(os.path.join(self.root, new_rel))
-                            .withColumn("_change_type", F.lit("insert"))
-                        )
-                    extra["cdf"] = self._write_cdf(changes, v + 1)
-            finally:
-                if self.cdf_enabled:
-                    slice_df.unpersist()
-        elif self.cdf_enabled:
-            extra["cdf"] = self._write_cdf(
-                self.spark.read.schema(schema)
-                .parquet(os.path.join(self.root, new_rel))
-                .withColumn("_change_type", F.lit("insert")),
-                v + 1,
-            )
-        committed = self._commit_rebased(
-            v, "replace_where", add=add, remove=list(touched),
-            schema=schema, extra=extra,
-            read_files=candidates, probes=probes,
-        )
-        if empty_new is not None:
-            # the commit settled without referencing it — reclaim now
-            shutil.rmtree(
-                os.path.join(self.root, empty_new), ignore_errors=True
-            )
-        return committed
 
     def merge_upsert(self, source: DataFrame, keys: list[str]) -> int:
-        """MERGE (source wins on key match) as copy-on-write: read the
-        snapshot, merge relationally (operators/merge.py upsert — the same
-        engine the plain-parquet queries pin), write the merged segment,
-        commit swapping the whole live set.  See the module docstring for
-        the pruned-rewrite scale path."""
-        from energy_emissions_lakehouse_spark.operators.merge import upsert
-
-        source = self._require_schema(source, "merge_upsert")
-        v, live, _, _ = self._snapshot_state(None)
-        target = self.read(v)
-        extra: dict = {"keys": keys}
-        if self.cdf_enabled:
-            # the change-feed write and the merged-segment write are two
-            # actions over the same target scan — persist it across both
-            # (this is the whole-set merge, already the non-scale form;
-            # the pruned variant persists only the touched slice)
-            target = target.persist()
-        try:
-            merged = upsert(target=target, source=source, keys=keys)
-            if self.cdf_enabled:
-                extra["cdf"] = self._write_cdf(
-                    self._merge_changes(target, source, keys), v + 1
-                )
-            add = [self._write_segment(merged, v + 1)]
-        finally:
-            if self.cdf_enabled:
-                target.unpersist()
-        self._commit(
-            v + 1, "merge", add=add, remove=live,
-            schema=merged.schema, extra=extra,
-        )
-        return v + 1
-
-    @staticmethod
-    def _merge_changes(
-        target: DataFrame, source: DataFrame, keys: list[str]
-    ) -> DataFrame:
-        """The row-level change set of an upsert — update_preimage/
-        update_postimage per matched key, insert per new key (Delta's
-        unconditional WHEN MATCHED UPDATE CDF; operators/merge.py
-        upsert_change_feed, the engine the plain-parquet change-feed
-        query pins)."""
+        """MERGE (source wins on key match) as copy-on-write with a
+        file-level pruned rewrite — the shape Delta/Iceberg execute at
+        scale: only segments whose key range overlaps the source keys
+        (:meth:`touched_segments`) are read and rewritten, merged
+        relationally by operators/merge.py ``upsert`` (the engine the
+        plain-parquet queries pin); provably-disjoint segments stay live
+        UNTOUCHED in the new commit.  Pruning on ``keys[0]`` alone is
+        sound: an all-keys match requires equality on the first key, so
+        a segment disjoint in ``keys[0]`` cannot contain a match;
+        unmatched source rows (inserts) land in the rewritten segment.
+        Correctness never rests on the stats: a statless segment is
+        conservatively rewritten.  The touched slice holds every
+        matchable key, so its change set (update pre/post images,
+        inserts) is the full-table change set."""
         from energy_emissions_lakehouse_spark.operators.merge import (
+            upsert,
             upsert_change_feed,
         )
 
-        return upsert_change_feed(target, source, keys)
+        source = self._require_schema(source, "merge_upsert")
+        keys = list(keys)
+        return self._copy_on_write(
+            "merge", {"keys": keys},
+            lambda s: (
+                upsert(s, source, keys), upsert_change_feed(s, source, keys)
+            ),
+            source=source, keys=keys,
+        )
+
+    #: the pruned rewrite is the copy-on-write MERGE; the name stays
+    merge_upsert_pruned = merge_upsert
 
     def touched_segments(
         self, source: DataFrame, key: str, version: int
@@ -3163,59 +3034,6 @@ class VersionedTable:
         untouched = [r for r in sorted(stats) if r not in touched]
         return sorted(touched), untouched
 
-    def merge_upsert_pruned(self, source: DataFrame, keys: list[str]) -> int:
-        """MERGE with file-level pruned rewrite — the shape Delta/Iceberg
-        actually execute at scale: only segments whose key range overlaps
-        the source keys are read and rewritten; provably-disjoint segments
-        stay live UNTOUCHED in the new commit.  A daily 0.1% delta into a
-        100 TB time-ordered table rewrites a handful of files instead of
-        the whole table (contrast merge_upsert, the whole-set
-        copy-on-write).  Pruning on ``keys[0]`` alone is sound: an
-        all-keys match requires equality on the first key, so a segment
-        disjoint in ``keys[0]`` cannot contain a match; unmatched source
-        rows (inserts) land in the rewritten segment.  Correctness never
-        rests on the stats: a statless segment is conservatively
-        rewritten, and the oracle checks the merged content value-exactly."""
-        from energy_emissions_lakehouse_spark.operators.merge import upsert
-
-        source = self._require_schema(source, "merge_upsert_pruned")
-        v, live, _, entry = self._snapshot_state(None)
-        touched, untouched = self.touched_segments(source, keys[0], v)
-        schema = StructType.fromJson(entry["schema"])
-        # DV-aware slice read: a merge-on-read-deleted row must not be
-        # resurrected by the rewrite (the rewrite MATERIALIZES the DVs of
-        # the touched segments; untouched segments keep theirs active)
-        target = self._scan_segments(v, touched, schema)
-        extra: dict = {
-            "keys": list(keys),
-            "rewritten": len(touched),
-            "preserved": len(untouched),
-        }
-        if self.cdf_enabled:
-            # the touched slice (small by construction — that is the point
-            # of pruning) feeds two jobs: persist it across both
-            target = target.persist()
-        try:
-            merged = upsert(target=target, source=source, keys=list(keys))
-            if self.cdf_enabled:
-                # the touched slice contains every matchable key, so the
-                # change set over it equals the full-table change set
-                extra["cdf"] = self._write_cdf(
-                    self._merge_changes(target, source, list(keys)), v + 1
-                )
-            add = [self._write_segment(merged, v + 1)]
-        finally:
-            if self.cdf_enabled:
-                target.unpersist()
-        # rebase probe: the merge READ every row whose keys[0] falls in
-        # the source's key range — LAZY so the uncontended path never
-        # runs it (resolved by _commit_rebased only on a lost race)
-        return self._commit_rebased(
-            v, "merge", add=add, remove=touched, schema=merged.schema,
-            extra=extra, read_files=touched,
-            probes=lambda: self._key_range_probes(source, keys[0]),
-        )
-
     @staticmethod
     def _key_range_probes(source: DataFrame, key: str) -> list[tuple]:
         """The rebase read probe of a merge: ``[(key, min, max)]`` over
@@ -3231,46 +3049,61 @@ class VersionedTable:
         )
 
     def delete_where(self, condition: Column | str) -> int:
-        """SQL DELETE semantics: rows where the predicate is TRUE are
-        removed; FALSE and NULL rows are kept (hence the coalesce)."""
-        cond = F.expr(condition) if isinstance(condition, str) else condition
-        v, live, _, _ = self._snapshot_state(None)
-        snapshot = self.read(v)
-        extra: dict = {"condition": str(condition)}
-        if self.cdf_enabled:
-            # delete-rows feed + kept-rows rewrite scan the same snapshot
-            snapshot = snapshot.persist()
-        try:
-            kept = snapshot.where(~F.coalesce(cond, F.lit(False)))
-            if self.cdf_enabled:
-                extra["cdf"] = self._write_cdf(
-                    snapshot.where(
-                        F.coalesce(cond, F.lit(False))
-                    ).withColumn("_change_type", F.lit("delete")),
-                    v + 1,
-                )
-            add = [self._write_segment(kept, v + 1)]
-        finally:
-            if self.cdf_enabled:
-                snapshot.unpersist()
-        self._commit(
-            v + 1, "delete", add=add, remove=live,
-            schema=kept.schema, extra=extra,
+        """SQL DELETE as pruned copy-on-write (Delta DELETE): rows where
+        the predicate is TRUE are removed; FALSE and NULL rows are kept.
+        Only the segments actually holding a matching row are rewritten,
+        keeping their other rows; every other segment stays live
+        untouched (see :meth:`_copy_on_write`).  No-op (commit-free)
+        when nothing matches.  On CDF tables the commit carries the
+        deleted rows."""
+        return self._copy_on_write(
+            "delete", {"condition": str(condition)}, match=_match(condition)
         )
-        return v + 1
 
-    def _resolve_assignments(
-        self, set_exprs: dict, schema: StructType
-    ) -> dict[str, Column]:
-        """SQL UPDATE SET list: every target must be an existing column,
-        and each value expression (a Column or a SQL string, evaluated
-        against the PRE-image row) is cast to the column's CURRENT type
-        — ANSI UPDATE semantics: assignment casts to the column type, it
-        never evolves the schema."""
+    def update_where(
+        self, condition: Column | str, set_exprs: dict
+    ) -> int:
+        """SQL UPDATE as pruned copy-on-write (Delta UPDATE): one
+        discovery pass finds the segments actually holding matching rows,
+        and ONLY those are rewritten with the SET expressions applied;
+        every other segment stays live untouched in the new commit.  At
+        100 TB a 0.1% update rewrites a handful of files, never the table
+        (and :meth:`update_where_mor` rewrites NOTHING).  SET values are
+        evaluated on the PRE-image and cast to the column's current type;
+        predicate UNKNOWN (null) rows are kept unchanged — both exactly
+        SQL UPDATE.  No-op (commit-free) when nothing matches.  The
+        rewritten segment passes the CHECK-constraint choke point like
+        every write; on CDF tables the commit carries
+        update_preimage/update_postimage rows from the same scan."""
+        match, assigns, extra = self._update_args(condition, set_exprs)
+        return self._copy_on_write(
+            "update", extra,
+            lambda s: (
+                s.select(
+                    *[
+                        F.when(match, assigns[c]).otherwise(F.col(c)).alias(c)
+                        if c in assigns
+                        else F.col(c)
+                        for c in s.columns
+                    ]
+                ),
+                _updated(s.where(match), assigns)[1],
+            ),
+            match=match,
+        )
+
+    def _update_args(
+        self, condition: Column | str, set_exprs: dict
+    ) -> tuple[Column, dict[str, Column], dict]:
+        """(match, SET list, commit extra) of an UPDATE.  Every SET target
+        must be an existing column, and each value expression (a Column
+        or a SQL string, evaluated against the PRE-image row) is cast to
+        the column's CURRENT type — ANSI UPDATE semantics: assignment
+        casts to the column type, it never evolves the schema."""
         if not set_exprs:
             raise ValueError("update: empty SET list")
-        types = {f.name: f.dataType for f in schema.fields}
-        out: dict[str, Column] = {}
+        types = {f.name: f.dataType for f in self._head_schema().fields}
+        assigns: dict[str, Column] = {}
         for name, value in set_exprs.items():
             if name not in types:
                 raise ValueError(
@@ -3278,23 +3111,12 @@ class VersionedTable:
                     f"(have {sorted(types)})"
                 )
             col = F.expr(value) if isinstance(value, str) else value
-            out[name] = col.cast(types[name])
-        return out
-
-    def _matched_segments(
-        self, scan: DataFrame, match: Column, rels: list[str]
-    ) -> list[str]:
-        """EXACT touched-file discovery: which of ``rels`` hold at least
-        one row where ``match`` is true?  One small job over an
-        identity-keeping scan — the predicate is pushed into the parquet
-        read (row-group stats skip non-matching groups at the source)
-        and only O(files) distinct segment names ever cross the driver.
-        Exact discovery can never be optimistic: a segment with no
-        matching row needs no rewrite by definition — so unlike
-        stats-based candidate pruning there is no exactness caveat."""
-        by_base = {os.path.basename(r): r for r in rels}
-        hits = scan.where(match).select("_dv_seg").distinct().collect()
-        return sorted(by_base[row._dv_seg] for row in hits)
+            assigns[name] = col.cast(types[name])
+        extra = {
+            "condition": str(condition),
+            "set": {c: str(set_exprs[c]) for c in sorted(set_exprs)},
+        }
+        return _match(condition), assigns, extra
 
     def _segment_rows(self, rel: str) -> int:
         """Row count of a just-written segment from its parquet FOOTERS —
@@ -3310,140 +3132,159 @@ class VersionedTable:
             )
         )
 
-    def update_where(
-        self, condition: Column | str, set_exprs: dict
+    def _copy_on_write(
+        self,
+        op: str,
+        extra: dict,
+        rewrite=None,
+        *,
+        match: Column | None = None,
+        source: DataFrame | None = None,
+        keys: list[str] | None = None,
+        prune: tuple | None = None,
+        batch: DataFrame | str | None = None,
     ) -> int:
-        """SQL UPDATE as pruned copy-on-write (Delta UPDATE): one
-        discovery pass finds the segments actually holding matching rows
-        (exact, via the pushed-down predicate — see
-        :meth:`_matched_segments`), and ONLY those are rewritten with the
-        SET expressions applied; every other segment stays live untouched
-        in the new commit.  At 100 TB a 0.1% update rewrites a handful of
-        files, never the table (and :meth:`update_where_mor` rewrites
-        NOTHING).  SET values are evaluated on the PRE-image and cast to
-        the column's current type; predicate UNKNOWN (null) rows are kept
-        unchanged — both exactly SQL UPDATE.  No-op (commit-free) when
-        nothing matches.  The rewritten segment passes the CHECK-
-        constraint choke point like every write; on CDF tables the commit
-        carries update_preimage/update_postimage rows from the same
-        scan.  The touched segments are rewritten through a DV-aware
-        read, so their deletion vectors materialize with the rewrite."""
-        cond = F.expr(condition) if isinstance(condition, str) else condition
+        """The copy-on-write DML core.  One snapshot; the candidate
+        segments are every live one, or with ``prune=(col, lo, hi)``
+        those the log's min/max stats cannot rule out.  The touched
+        segments are found EXACTLY for a predicate ``match`` (one
+        identity-keeping scan with the predicate pushed into the parquet
+        read; only O(files) segment names reach the driver), or for a
+        merge (``source``/``keys``) by :meth:`touched_segments`.  Only
+        the touched slice is read — through the deletion vectors, so the
+        rewrite materializes them — and rewritten as
+        ``rewrite(slice) -> (rows, change rows)``; the default keeps the
+        rows ``match`` does not select (DELETE).  ``batch`` (a DataFrame
+        to write, or the rel of an already-written segment) is added
+        after checking that every row satisfies ``match``.  The change
+        feed comes from the same persisted slice (plus the batch as
+        inserts), and the op commits once through
+        :meth:`_commit_rebased`.  A zero-row new segment is dropped, and
+        when nothing is added or removed the head is returned with no
+        commit."""
         v, live, dvs, entry = self._snapshot_state(None)
         schema = StructType.fromJson(entry["schema"])
-        data_cols = [f.name for f in schema.fields]
-        assigns = self._resolve_assignments(set_exprs, schema)
-        match = F.coalesce(cond, F.lit(False))
-        scan = self._scan_segments(
-            v, live, schema, dvs=dvs, keep_identity=True
-        )
-        touched = self._matched_segments(scan, match, live)
-        if not touched:
-            return v  # an UPDATE of zero rows: no-op, commit-free
-        slice_df = self._scan_segments(v, touched, schema, dvs=dvs)
-        extra: dict = {
-            "condition": str(condition),
-            "set": {c: str(set_exprs[c]) for c in sorted(set_exprs)},
-            "rewritten": len(touched),
-            "preserved": len(live) - len(touched),
-        }
-        if self.cdf_enabled:
-            # the rewrite and the two image feeds share one slice scan
-            slice_df = slice_df.persist()
-        try:
-            updated = slice_df.select(
-                *[
-                    F.when(match, assigns[c]).otherwise(F.col(c)).alias(c)
-                    if c in assigns
-                    else F.col(c)
-                    for c in data_cols
-                ]
+        add: list[str] = []
+        empty: list[str] = []
+        changes: list[DataFrame] = []
+        if batch is not None:
+            # the batch lands (and is validated) first: a rejected batch
+            # costs nothing but its own write
+            if isinstance(batch, str):
+                rel = batch
+                self._enforce_constraints([rel], self.constraints(v), op)
+            else:
+                rel = self._write_segment(batch, v + 1)
+            written = self.spark.read.schema(schema).parquet(
+                os.path.join(self.root, rel)
             )
-            if self.cdf_enabled:
-                matched_rows = slice_df.where(match)
-                pre = matched_rows.select(*data_cols).withColumn(
-                    "_change_type", F.lit("update_preimage")
+            if written.where(~match).limit(1).count():
+                shutil.rmtree(os.path.join(self.root, rel), ignore_errors=True)
+                raise ValueError(
+                    "overwrite_where: replacement rows must ALL satisfy "
+                    f"the predicate ({extra['condition']}) — batch "
+                    "rejected, table unchanged (the Delta replaceWhere "
+                    "contract)"
                 )
-                post = matched_rows.select(
-                    *[
-                        assigns[c].alias(c) if c in assigns else F.col(c)
-                        for c in data_cols
-                    ]
-                ).withColumn("_change_type", F.lit("update_postimage"))
-                extra["cdf"] = self._write_cdf(pre.unionByName(post), v + 1)
-            add = [self._write_segment(updated, v + 1)]
-        finally:
-            if self.cdf_enabled:
-                slice_df.unpersist()
-        self._commit(
-            v + 1, "update", add=add, remove=touched, schema=schema,
-            extra=extra,
+            if self._segment_rows(rel):
+                add.append(rel)
+                # insert images from the batch ALREADY WRITTEN — the
+                # input plan never recomputes
+                changes.append(
+                    written.withColumn("_change_type", F.lit("insert"))
+                )
+            else:
+                empty.append(rel)
+        if match is None:
+            touched, _ = self.touched_segments(source, keys[0], v)
+            # the merge READ every row whose keys[0] falls in the
+            # source's key range — LAZY so the uncontended path never
+            # runs the agg (resolved by _commit_rebased on a lost race)
+            read_files = touched
+            probes = functools.partial(self._key_range_probes, source, keys[0])
+        else:
+            read_files, skipped = (
+                self.pruned_segments(v, *prune) if prune else (live, [])
+            )
+            if skipped:
+                extra["stats_skipped"] = len(skipped)
+            touched = []
+            if read_files:
+                by_base = {os.path.basename(r): r for r in read_files}
+                hits = (
+                    self._scan_segments(
+                        v, read_files, schema, dvs=dvs, keep_identity=True
+                    )
+                    .where(match)
+                    .select("_dv_seg")
+                    .distinct()
+                    .collect()
+                )
+                touched = sorted(by_base[row._dv_seg] for row in hits)
+            probes = [prune] if prune else None
+        extra.update(
+            rewritten=len(touched), preserved=len(live) - len(touched)
         )
-        return v + 1
+        slice_df = None
+        if touched or match is None:  # a merge inserts even with no slice
+            slice_df = self._scan_segments(v, touched, schema, dvs=dvs)
+            if self.cdf_enabled:
+                # the rewrite and the change feed share one slice scan
+                slice_df = slice_df.persist()
+        try:
+            if slice_df is not None:
+                if rewrite is None:
+                    rows = slice_df.where(~match)
+                    feed = slice_df.where(match).withColumn(
+                        "_change_type", F.lit("delete")
+                    )
+                else:
+                    rows, feed = rewrite(slice_df)
+                rel = self._write_segment(rows, v + 1)
+                (add if self._segment_rows(rel) else empty).append(rel)
+                changes.insert(0, feed)
+            if (add or touched) and self.cdf_enabled:
+                extra["cdf"] = self._write_cdf(
+                    functools.reduce(DataFrame.unionByName, changes), v + 1
+                )
+        finally:
+            if slice_df is not None and self.cdf_enabled:
+                slice_df.unpersist()
+        committed = v
+        if add or touched:
+            committed = self._commit_rebased(
+                v, op, add=add, remove=touched, schema=schema, extra=extra,
+                read_files=read_files, probes=probes,
+            )
+        # zero-row segments are reclaimed once the commit settles: a
+        # caller retrying a lost race may hand the same batch back in
+        for rel in empty:
+            shutil.rmtree(os.path.join(self.root, rel), ignore_errors=True)
+        return committed
 
     def delete_where_mor(self, condition: Column | str) -> int:
         """Merge-on-read DELETE (Delta deletion vectors / Iceberg
-        positional deletes): instead of rewriting every live segment
-        minus the matching rows (:meth:`delete_where`, copy-on-write),
-        ONE filtered scan finds the matching rows' (segment, file,
-        position) identities and writes them as a tiny deletion-vector
-        file; the commit references it with ZERO data segments touched.
-        Readers mask DV positions with a broadcast anti-join.  At 100 TB
-        this turns a delete from a full table rewrite into a scan plus a
-        kilobytes-scale metadata write; the deferred rewrite happens at
-        the next :meth:`compact` / full-replace, which materializes and
-        clears the DVs.  Same null semantics as SQL DELETE (only
-        predicate-TRUE rows are deleted).  Note the semantics are
-        POSITION-scoped, not predicate-scoped: rows appended AFTER this
-        commit stay live even if they match the predicate."""
-        cond = F.expr(condition) if isinstance(condition, str) else condition
-        v, live, dvs, entry = self._snapshot_state(None)
-        schema = StructType.fromJson(entry["schema"])
-        if not live:
-            # SQL DELETE from an empty table is a no-op, not an error —
-            # same commit-free surface as delete_where / zero matches
-            return v
-        data_cols = [f.name for f in schema.fields]
-        # the identified scan already excludes previously-masked rows, so
-        # they cannot re-enter the new DV or double-count in the feed
-        scan = self._scan_segments(
-            v, live, schema, dvs=dvs, keep_identity=True
+        positional deletes): instead of rewriting the segments holding
+        matches (:meth:`delete_where`, copy-on-write), ONE filtered scan
+        finds the matching rows' (segment, file, position) identities
+        and writes them as a tiny deletion-vector file; the commit
+        references it with ZERO data segments touched.  Readers mask DV
+        positions with a broadcast anti-join.  At 100 TB this turns a
+        delete from a rewrite into a scan plus a kilobytes-scale
+        metadata write; the deferred rewrite happens at the next
+        :meth:`compact` / full-replace, which materializes and clears
+        the DVs.  Same null semantics as SQL DELETE (only predicate-TRUE
+        rows are deleted), and commit-free when nothing matches.  Note
+        the semantics are POSITION-scoped, not predicate-scoped: rows
+        appended AFTER this commit stay live even if they match the
+        predicate."""
+        return self._merge_on_read(
+            "delete_mor", {"condition": str(condition)},
+            lambda rows: (
+                None, rows.withColumn("_change_type", F.lit("delete"))
+            ),
+            match=_match(condition),
         )
-        matched = scan.where(F.coalesce(cond, F.lit(False)))
-        extra: dict = {"condition": str(condition)}
-        if self.cdf_enabled:
-            # the DV write and the delete-rows feed share one scan
-            matched = matched.persist()
-        try:
-            dv_rel = self._write_dv(matched, v + 1)
-            if dv_rel is None:
-                # a DELETE matching ZERO rows is a commit-free no-op —
-                # the surface every other DML shape already has
-                # (delete_where, update_where, update_where_mor, merge)
-                # and what the model checker's noop program asserts.
-                # Found by the round-9 DDL-aware random program: this
-                # path previously published an empty no-change
-                # "delete_mor" commit (harmless to readers/streams, but
-                # an inconsistent DML surface — and the original
-                # checker's seed had never drawn its noop op to catch
-                # it).  No CDF either: zero rows changed.
-                return v
-            extra["dv_add"] = [dv_rel]
-            if self.cdf_enabled:
-                extra["cdf"] = self._write_cdf(
-                    matched.select(*data_cols).withColumn(
-                        "_change_type", F.lit("delete")
-                    ),
-                    v + 1,
-                )
-        finally:
-            if self.cdf_enabled:
-                matched.unpersist()
-        self._commit(
-            v + 1, "delete_mor", add=[], remove=[], schema=schema,
-            extra=extra,
-        )
-        return v + 1
 
     def update_where_mor(
         self, condition: Column | str, set_exprs: dict
@@ -3461,54 +3302,11 @@ class VersionedTable:
         (commit-free) when nothing matches.  The appended images pass
         the CHECK-constraint choke point like every write; CDF commits
         carry update_preimage/update_postimage rows from the same scan."""
-        cond = F.expr(condition) if isinstance(condition, str) else condition
-        v, live, dvs, entry = self._snapshot_state(None)
-        if not live:
-            # SQL UPDATE of an empty table is a no-op, not an error —
-            # same commit-free surface as update_where / zero matches
-            return v
-        schema = StructType.fromJson(entry["schema"])
-        data_cols = [f.name for f in schema.fields]
-        assigns = self._resolve_assignments(set_exprs, schema)
-        # the identified scan already excludes previously-masked rows, so
-        # they cannot re-enter the new DV or the appended images
-        scan = self._scan_segments(
-            v, live, schema, dvs=dvs, keep_identity=True
+        match, assigns, extra = self._update_args(condition, set_exprs)
+        return self._merge_on_read(
+            "update_mor", extra, lambda rows: _updated(rows, assigns),
+            match=match,
         )
-        # one scan feeds the DV write, the image write, and (CDF) the
-        # pre/post feeds — persist it across those jobs
-        matched = scan.where(F.coalesce(cond, F.lit(False))).persist()
-        extra: dict = {
-            "condition": str(condition),
-            "set": {c: str(set_exprs[c]) for c in sorted(set_exprs)},
-        }
-        try:
-            dv_rel = self._write_dv(matched, v + 1)
-            if dv_rel is None:
-                return v  # an UPDATE of zero rows: no-op, commit-free
-            extra["dv_add"] = [dv_rel]
-            images = matched.select(
-                *[
-                    assigns[c].alias(c) if c in assigns else F.col(c)
-                    for c in data_cols
-                ]
-            )
-            if self.cdf_enabled:
-                pre = matched.select(*data_cols).withColumn(
-                    "_change_type", F.lit("update_preimage")
-                )
-                post = images.withColumn(
-                    "_change_type", F.lit("update_postimage")
-                )
-                extra["cdf"] = self._write_cdf(pre.unionByName(post), v + 1)
-            add = [self._write_segment(images, v + 1)]
-        finally:
-            matched.unpersist()
-        self._commit(
-            v + 1, "update_mor", add=add, remove=[], schema=schema,
-            extra=extra,
-        )
-        return v + 1
 
     def merge_upsert_mor(self, source: DataFrame, keys: list[str]) -> int:
         """MERGE as merge-on-read (Iceberg MOR merge / Delta DV-backed
@@ -3517,62 +3315,98 @@ class VersionedTable:
         scan against the source's distinct keys — and the ENTIRE source
         lands as one appended segment (source-wins updates and inserts
         together).  ZERO existing segments are rewritten: where
-        :meth:`merge_upsert_pruned` rewrites the touched files, this
-        writes only the new segment plus a kilobytes-scale position
-        file, the cheapest possible shape for a small delta into a
-        100 TB table; the deferred rewrite amortizes into the next
-        :meth:`compact`.  Same contract as the other merges: source keys
-        must be unique (standard MERGE precondition).  On CDF-enabled
-        tables the commit carries update pre/post images and inserts
-        from the same scan pipeline."""
+        :meth:`merge_upsert` rewrites the touched files, this writes only
+        the new segment plus a kilobytes-scale position file, the
+        cheapest possible shape for a small delta into a 100 TB table;
+        the deferred rewrite amortizes into the next :meth:`compact`.
+        Same contract as the copy-on-write merge: source keys must be
+        unique (standard MERGE precondition).  On CDF-enabled tables the
+        commit carries update pre/post images and inserts from the same
+        scan pipeline."""
+        from energy_emissions_lakehouse_spark.operators.merge import (
+            upsert_change_feed,
+        )
+
         source = self._require_schema(source, "merge_upsert_mor")
+        keys = list(keys)
+        return self._merge_on_read(
+            "merge_mor", {"keys": keys},
+            lambda rows: (
+                source.select(*rows.columns),
+                upsert_change_feed(rows, source, keys),
+            ),
+            source=source, keys=keys,
+        )
+
+    def _merge_on_read(
+        self,
+        op: str,
+        extra: dict,
+        apply,
+        *,
+        match: Column | None = None,
+        source: DataFrame | None = None,
+        keys: list[str] | None = None,
+    ) -> int:
+        """The merge-on-read DML core.  One identified scan of the live
+        set (DVs already applied, so previously masked rows cannot
+        re-enter the new DV, the images or the feed); the matched rows
+        are those where ``match`` is true, or for a merge
+        (``source``/``keys``) those whose keys the source holds (one
+        broadcast semi-join).  Their positions become one deletion
+        vector (:meth:`_write_dv`); ``apply(matched rows) -> (images or
+        None, change rows)`` gives the optional appended segment and the
+        change feed; one commit through :meth:`_commit_rebased`.  A
+        zero-row image segment is dropped, and when nothing is added or
+        masked the head is returned with no commit.
+
+        Rebase contract: the op READ every live file; for a merge, an
+        interleaved add whose keys[0] range is provably disjoint from
+        the source's cannot hold a match, so the lost race rebases
+        (probe is lazy: the uncontended path never pays the key-range
+        agg); an in-range add, any removal of a read file, or another DV
+        conflict."""
         v, live, dvs, entry = self._snapshot_state(None)
         schema = StructType.fromJson(entry["schema"])
-        data_cols = [f.name for f in schema.fields]
-        extra: dict = {"keys": list(keys)}
-        identified = (
-            self._scan_segments(v, live, schema, dvs=dvs, keep_identity=True)
-            if live
-            else None
+        scan = self._scan_segments(
+            v, live, schema, dvs=dvs, keep_identity=True
         )
-        if self.cdf_enabled and identified is not None:
-            # the DV discovery and the change images share one scan
-            identified = identified.persist()
+        if match is None:
+            matched = scan.join(
+                F.broadcast(source.select(*keys).distinct()),
+                on=keys,
+                how="left_semi",
+            )
+            probes = functools.partial(self._key_range_probes, source, keys[0])
+        else:
+            matched, probes = scan.where(match), None
+        # one scan feeds the DV write, the image write and the feed
+        matched = matched.persist()
+        add: list[str] = []
         try:
-            if identified is not None:
-                matched = identified.join(
-                    F.broadcast(source.select(*keys).distinct()),
-                    on=list(keys),
-                    how="left_semi",
-                )
-                dv_rel = self._write_dv(matched, v + 1)
-                if dv_rel is not None:
-                    extra["dv_add"] = [dv_rel]
-            if self.cdf_enabled:
-                target = (
-                    identified.select(*data_cols)
-                    if identified is not None
-                    else self.spark.createDataFrame([], schema)
-                )
-                extra["cdf"] = self._write_cdf(
-                    self._merge_changes(target, source, list(keys)), v + 1
-                )
-            add = [self._write_segment(source.select(*data_cols), v + 1)]
+            dv_rel = self._write_dv(matched, v + 1)
+            images, feed = apply(
+                matched.select(*[f.name for f in schema.fields])
+            )
+            if images is not None:
+                rel = self._write_segment(images, v + 1)
+                if self._segment_rows(rel):
+                    add.append(rel)
+                else:
+                    shutil.rmtree(
+                        os.path.join(self.root, rel), ignore_errors=True
+                    )
+            if dv_rel is not None:
+                extra["dv_add"] = [dv_rel]
+            if (add or dv_rel) and self.cdf_enabled:
+                extra["cdf"] = self._write_cdf(feed, v + 1)
         finally:
-            if self.cdf_enabled and identified is not None:
-                identified.unpersist()
-        # rebase contract (same decision table as merge_upsert_pruned):
-        # the merge READ every live file (the identified scan) hunting
-        # rows whose keys match the source — an interleaved add whose
-        # keys[0] range is provably disjoint from the source's cannot
-        # hold a match, so the lost race rebases; an in-range add (a row
-        # this merge should have masked), any removal of a file the DV
-        # references, or another DV all conflict.  Probe is lazy: the
-        # uncontended path never pays the key-range agg.
+            matched.unpersist()
+        if not add and dv_rel is None:
+            return v
         return self._commit_rebased(
-            v, "merge_mor", add=add, remove=[], schema=schema,
-            extra=extra, read_files=live,
-            probes=lambda: self._key_range_probes(source, keys[0]),
+            v, op, add=add, remove=[], schema=schema, extra=extra,
+            read_files=live, probes=probes,
         )
 
     def compact_dvs(self) -> int:

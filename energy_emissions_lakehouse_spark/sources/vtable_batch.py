@@ -668,9 +668,8 @@ class VtableBatchWriter(DataSourceArrowWriter):
         race re-runs discovery against the new head (stranding at most
         a vacuumable kept-segment orphan).  A batch whose task files
         hold ZERO rows is handed over as ``None`` (the pure predicate
-        delete) and its empty segment swept HERE — _replace_slice would
-        otherwise delete it before its commit attempt, and a lost race
-        would then retry against a vanished directory."""
+        delete) and its empty segment swept HERE, so a lost race never
+        retries against a vanished directory."""
         files = [m.filename for m in messages if m and m.filename]
         has_rows = any(m.rows for m in messages if m)
         new_rel = self.rel if (files and has_rows) else None

@@ -498,6 +498,27 @@ def test_merge_pruned_statless_segment_is_conservatively_rewritten(
     assert vt.read(v).count() == 6
 
 
+def test_delete_rewrites_only_segments_holding_matches(spark, vt_root):
+    """A copy-on-write DELETE removes exactly the segments holding a
+    matching row; the other segment stays live under its original path."""
+    vt = _mk(spark, vt_root, n=10)  # segment A: keys 0..9
+    vt.append(
+        spark.range(100, 110).select(
+            F.col("id").alias("k"), (F.col("id") * 10).alias("v")
+        )
+    )  # segment B: keys 100..109
+    seg_a = vt._read_commit(0)["add"][0]
+    seg_b = vt._read_commit(1)["add"][0]
+    v = vt.delete_where("k < 5")
+    entry = vt._read_commit(v)
+    assert entry["op"] == "delete"
+    assert entry["remove"] == [seg_a]
+    assert seg_b in vt._fold(v).live
+    assert [k for k, _ in _rows(vt.read(v))] == (
+        list(range(5, 10)) + list(range(100, 110))
+    )
+
+
 def test_idempotent_append_makes_replays_noops(spark, vt_root):
     """The txn action: a replayed (source, batch) pair returns the
     original committed version without writing anything."""

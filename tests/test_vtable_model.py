@@ -140,23 +140,53 @@ def test_random_dml_program_matches_model_and_history(spark, root):
                 k: list(vs) for k, vs in history[target].items()
             }
         elif op == "noop_dml":
-            # never-matching predicates: all four DML shapes must be
-            # commit-free (the head version may not move)
-            head = vt.latest_version()
-            assert vt.delete_where_mor("k = -1") == head
-            assert vt.update_where_mor("k = -1", {"v": F.lit(0)}) == head
-            assert vt.latest_version() == head
+            _assert_noop_dml(vt)
         head = vt.latest_version()
         snap = _snapshot(model)
         got = _table_state(vt)
         assert got == snap, f"step {step} op {op}: head != model"
         history[head] = snap
+    # the seed's draws may hold no noop_dml: run it once on the final,
+    # multi-segment table so the no-effect contract is always exercised
+    _assert_noop_dml(vt)
     # ---- time travel: EVERY recorded version replays its exact state
     for v, snap in sorted(history.items()):
         assert _table_state(vt, v) == snap, f"time travel to v{v} diverged"
     # ---- and the change feed spans the whole history without gaps
     assert vt._versions() == list(range(vt.latest_version() + 1))
     _assert_checkpoints_exact(spark, root)
+
+
+def _assert_noop_dml(vt):
+    """Never-matching predicates: all four DML shapes must be
+    commit-free (the head version may not move)."""
+    head = vt.latest_version()
+    assert vt.delete_where("k = -1") == head
+    assert vt.update_where("k = -1", {"v": F.lit(0)}) == head
+    assert vt.delete_where_mor("k = -1") == head
+    assert vt.update_where_mor("k = -1", {"v": F.lit(0)}) == head
+    assert vt.latest_version() == head
+
+
+def test_empty_source_merges_are_commit_free(spark, root):
+    """A MERGE with an empty source changes nothing, in every shape: the
+    head does not move and no segment (zero-row or otherwise) is
+    written."""
+    vt = VersionedTable.create(
+        spark, root, _df(spark, [(1, 10), (2, 20)]), enable_cdf=True
+    )
+    vt.append(_df(spark, [(3, 30)]))
+    head = vt.latest_version()
+    data = os.path.join(root, vt_mod.DATA_DIR)
+    before = sorted(os.listdir(data))
+    empty = _df(spark, [])
+    for merge in (
+        vt.merge_upsert, vt.merge_upsert_pruned, vt.merge_upsert_mor
+    ):
+        assert merge(empty, ["k"]) == head, merge.__name__
+    assert vt.latest_version() == head
+    assert sorted(os.listdir(data)) == before
+    assert _table_state(vt) == {1: (10,), 2: (20,), 3: (30,)}
 
 
 def _assert_checkpoints_exact(spark, root):
